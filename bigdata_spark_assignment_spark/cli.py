@@ -77,8 +77,10 @@ def main(argv: Sequence[str] | None = None) -> dict[str, dict[str, float]]:
         cv_folds=args.cv_folds)
     prepared = pipe.prepare(flights, planes).cache()
     models = tuple(m.strip() for m in args.models.split(",") if m.strip())
-    metrics = pipe.fit_evaluate(prepared, models=models)
-    prepared.unpersist()
+    try:
+        metrics = pipe.fit_evaluate(prepared, models=models)
+    finally:
+        prepared.unpersist()
 
     # the reference's closing console summary (Main.scala:641-665)
     print(f"{'model':<6} {'rmse':>10} {'r2':>10}")

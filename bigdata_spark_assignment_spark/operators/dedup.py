@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import time
 
 import numpy as np
 import pandas as pd
@@ -120,30 +121,6 @@ def minhash_signature_expr(shingles: Column, num_hashes: int = 48) -> Column:
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda i: F.array_min(
             F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
-def minhash_band_hashes_expr(shingles: Column, bands: int, rows: int) -> Column:
-    """LSH band hashes computed DIRECTLY from the shingle set: band b =
-    xxhash64 of the array of minhash values for hash-family indices
-    [b·rows, (b+1)·rows). Two docs are candidates iff they agree on at
-    least one band.
-
-    Why not compose ``band_hashes(minhash_signature_expr(...))``:
-    Catalyst inlines the signature into the banding lambda
-    (CollapseProject), and interpreted higher-order functions re-eval
-    the lambda body per element — the full signature would be
-    recomputed once PER BAND, a bands× blow-up (measured 100×+ wall
-    clock at sf0.01). This formulation evaluates each of the
-    bands×rows family members exactly once per row.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            F.transform(
-                F.sequence(b * rows, b * rows + (rows - 1)),
-                lambda i: F.array_min(
-                    F.transform(shingles, lambda s: F.xxhash64(s, i))))),
     )
 
 
@@ -533,8 +510,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
 
     changed = 0
     for _round in range(max_iter):
-        import time as _time
-        _t0 = _time.perf_counter()
+        _t0 = time.perf_counter()
         neighbor_min = (edges.join(labels,
                                    edges["dst"] == labels["id"])
                         .groupBy("src")
@@ -560,7 +536,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
             # per-round wall time, so the 100x extrapolation is
             # arithmetic (rounds x per-round shuffle) not faith
             round_stats.append({"round": _round + 1, "changed": changed,
-                                "seconds": round(_time.perf_counter()
+                                "seconds": round(time.perf_counter()
                                                  - _t0, 3)})
         if changed == 0:
             break
@@ -631,8 +607,7 @@ def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
     converged = False
 
     for _round in range(max_iter):
-        import time as _time
-        _t0 = _time.perf_counter()
+        _t0 = time.perf_counter()
         # Large-star: for each node x, m = min(N(x) ∪ {x}); connect
         # every STRICTLY LARGER neighbor to m. Keeps (big, small)
         # orientation: emitted edges are (nbr, m) with nbr > x ≥ m.
@@ -663,7 +638,7 @@ def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
         sig = (sig["n"], sig["h"])
         if round_stats is not None:
             round_stats.append({"round": _round + 1, "edges": sig[0],
-                                "seconds": round(_time.perf_counter()
+                                "seconds": round(time.perf_counter()
                                                  - _t0, 3)})
         if sig == prev_sig:
             converged = True

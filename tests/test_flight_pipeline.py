@@ -9,6 +9,8 @@ hashes (ML training is seed-sensitive — §7 hard part 1).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -32,6 +34,63 @@ def fixture_tables(spark):
     yield flights, planes
     flights.unpersist()
     planes.unpersist()
+
+
+@pytest.fixture(scope="module")
+def csv_tables(spark, fixture_tables, tmp_path_factory):
+    """The 4k fixture round-tripped through header CSVs and read back
+    with ``io.read_csv`` (all strings), as the batch job reads it."""
+    from bigdata_spark_assignment_spark.io import read_csv
+
+    root = tmp_path_factory.mktemp("flight_csv")
+    frames = []
+    for name, df in zip(("flights", "planes"), fixture_tables):
+        path = str(root / name)
+        df.write.option("header", True).csv(path)
+        frames.append(read_csv(spark, path))
+    return tuple(frames)
+
+
+def test_prepare_cuts_csv_lineage(spark, csv_tables):
+    """The cleaned frame is materialized once inside ``prepare``: the
+    prepared plan reads checkpointed blocks, not the CSV files (the
+    lazy lineage re-scans them 8 times per consumer)."""
+    flights, planes = csv_tables
+    prepared = FlightDelayPipeline(selector_mode="fdr").prepare(
+        flights, planes)
+    plan = prepared._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan csv" not in plan, plan
+
+
+def test_prepare_matches_uncut_lineage(spark, csv_tables):
+    """Differential: the cut changes no row and no selected feature
+    versus featurize(clean_flights(...)) + the same selector, lazy."""
+    from pyspark.ml.feature import UnivariateFeatureSelector
+
+    from bigdata_spark_assignment_spark.ml.flight_delay import LABEL
+
+    flights, planes = csv_tables
+    pipe = FlightDelayPipeline(selector_mode="fdr")
+    prepared = pipe.prepare(flights, planes)
+
+    uncut = featurize(clean_flights(flights, planes)) \
+        .withColumn(LABEL, F.col(LABEL).cast("double"))
+    sel = UnivariateFeatureSelector(
+        featuresCol="normFeatures", outputCol="selectedFeatures",
+        labelCol=LABEL, selectionMode="fdr")
+    sel.setFeatureType("continuous").setLabelType("continuous")
+    sel.setSelectionThreshold(pipe.selection_threshold)
+    model = sel.fit(uncut)
+    assert pipe.selected_features == list(model.selectedFeatures)
+
+    def rows(df):
+        return Counter((r[LABEL], tuple(r.selectedFeatures.toArray()))
+                       for r in df.select(LABEL, "selectedFeatures")
+                       .collect())
+
+    got, want = rows(prepared), rows(model.transform(uncut))
+    assert sum(got.values()) > 2000
+    assert got == want
 
 
 def test_clean_flights_contract(spark, fixture_tables):

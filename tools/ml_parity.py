@@ -15,6 +15,10 @@ arrival-delay signal is dominantly linear in the observed features;
 default-depth trees piecewise-constant-underfit a wide continuous
 predictor. The committed table goes into BASELINE.md.
 
+Each ``prepare`` (including the caller's cache fill) runs under its
+own job group; its Spark job count, read from the status tracker, is
+printed next to ``prepare_s``.
+
 Usage: python tools/ml_parity.py [n_rows] [cv_folds]
        (defaults 1_000_000 and 5 — the reference protocol)
 """
@@ -47,27 +51,38 @@ def main() -> None:
     flights = make_flights_expo(spark, n=n)
     planes = make_planes(spark, n=3000)
 
+    sc = spark.sparkContext
     results = {}
     t_all = time.perf_counter()
     for mode in ("fdr", "fwe"):
         pipe = FlightDelayPipeline(selector_mode=mode, cv_folds=folds)
+        group = f"ml-parity-prepare-{mode}"
+        sc.setJobGroup(group, group)
         t0 = time.perf_counter()
         prepared = pipe.prepare(flights, planes).cache()
-        n_rows = prepared.count()
-        t_prep = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        metrics = pipe.fit_evaluate(prepared, models=("lr", "dtr", "rf"))
-        t_fit = time.perf_counter() - t0
-        prepared.unpersist()
+        try:
+            n_rows = prepared.count()
+            t_prep = time.perf_counter() - t0
+            sc.setJobGroup(None, None)
+            # job ids come from listener events; drain the bus first
+            sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            prep_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            t0 = time.perf_counter()
+            metrics = pipe.fit_evaluate(prepared, models=("lr", "dtr", "rf"))
+            t_fit = time.perf_counter() - t0
+        finally:
+            prepared.unpersist()
         results[mode] = {
             "n_clean_rows": n_rows,
             "prepare_s": round(t_prep, 1),
+            "prepare_jobs": prep_jobs,
             "fit_eval_s": round(t_fit, 1),
             "metrics": {m: {k: round(v, 3) for k, v in d.items()}
                         for m, d in metrics.items()},
         }
         print(f"[{mode}] rows={n_rows} prep={t_prep:.1f}s "
-              f"fit={t_fit:.1f}s {results[mode]['metrics']}", flush=True)
+              f"prep_jobs={prep_jobs} fit={t_fit:.1f}s "
+              f"{results[mode]['metrics']}", flush=True)
 
     out = {"n_input_rows": n, "cv_folds": folds,
            "protocol": "70/30 split seed 10, k-fold CV, RMSE selector, "
