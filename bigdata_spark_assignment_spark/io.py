@@ -243,10 +243,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType | None = None,
              header: bool = True, **options) -> DataFrame:
     """CSV scan (reference S1/S2, ``Main.scala:59,86``) with an explicit

@@ -27,8 +27,30 @@ with a planted linear signal — is that LR recovers the signal
 imputer aggregates (one shuffle-free single-pass agg each), and
 CV's fold boundaries. StringIndexer collects per-column distinct
 labels to the driver — bounded by categorical cardinality, not data
-size. CrossValidator multiplies the training cost by folds×grid;
-``parallelism`` is exposed so fits run concurrently.
+size. Cross-validation multiplies the training cost by folds×grid
+(plus one refit); ``cross_validate`` runs those fits concurrently,
+``parallelism`` at a time.
+
+Cross-validation is ``cross_validate``, not ``pyspark.ml.tuning.
+CrossValidator``: the latter's ``parallelism`` spans only the param
+maps of one fold — it runs the folds one after another and then the
+refit — so with the one-point grids used here it ran k+1 fits back to
+back. Each fit is a chain of small jobs (1-4 tasks each) with driver
+gaps between them, so the cores idled between jobs. ``cross_validate``
+submits every (fold, param map) fit-and-evaluate to one thread pool,
+and with a one-point grid the refit on the whole split joins the same
+pool; the work per fit is unchanged, only overlapped. Its results are
+bit-equal to CrossValidator's (same ``rand(seed)`` fold bounds, same
+``np.mean`` over folds, same refit), asserted in
+tests/test_flight_pipeline.py.
+
+``fit_evaluate`` projects both splits to (label, features) right
+AFTER ``randomSplit``, before the training split is cached: the fits
+read two of the prepared frame's ~44 columns (13 of them vectors).
+Projecting before the split would change the split itself —
+``Dataset.randomSplit`` sorts each partition by every orderable column
+before sampling, so a narrower frame samples different rows (seed 7
+LR RMSE moved 10.5888 → 11.3811 that way).
 
 The cleaned frame is materialized once, between ``clean_flights`` and
 ``featurize``. Left lazy, its optimized plan holds 8 CSV scans and 14
@@ -42,7 +64,10 @@ cache fill. ``localCheckpoint`` cuts that lineage (see
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from multiprocessing.pool import ThreadPool
 
+import numpy as np
+from pyspark import StorageLevel
 from pyspark.ml import Pipeline
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import (
@@ -57,9 +82,10 @@ from pyspark.ml.regression import (
     LinearRegression,
     RandomForestRegressor,
 )
-from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+from pyspark.ml.tuning import ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..fixtures import FORBIDDEN_COLUMNS
 from ..operators.cleaning import (
@@ -173,6 +199,64 @@ def featurize(df: DataFrame, label: str = LABEL) -> DataFrame:
     return model.transform(df)
 
 
+def cross_validate(est, grid, evaluator, dataset: DataFrame, num_folds: int,
+                   seed: int, parallelism: int):
+    """M14 k-fold cross-validation with CrossValidator's semantics
+    (``pyspark.ml.tuning.CrossValidator._fit``/``_kFold``), all fits
+    at once. Returns ``(best_model, avg_metrics)``.
+
+    Folds: ``rand(seed)`` over ``dataset``, fold ``i`` validates on
+    ``[i·h, (i+1)·h)`` with ``h = 1/num_folds`` and trains on the rest.
+    Every (fold, param map) fit-and-evaluate goes to one thread pool
+    of at most ``parallelism`` threads; with a one-point grid the
+    refit on the whole ``dataset`` needs no metric and is submitted
+    first, as the longest fit. With more points the refit of the best map (mean
+    metric over folds, ``np.mean`` as CrossValidator averages) follows
+    in the calling thread. Pool targets are wrapped with
+    ``inheritable_thread_target`` so the caller's job group and local
+    properties follow every fold's jobs.
+
+    Fold caches: all 2·k fold frames are persisted
+    ``MEMORY_AND_DISK_DESER`` up front (CrossValidator holds one
+    fold's pair at a time) and unpersisted in ``finally`` once every
+    pool task has finished — k copies of ``dataset``, which is why the
+    caller narrows it to the columns the fits read.
+    """
+    h = 1.0 / num_folds
+    df = dataset.select("*", F.rand(seed).alias("__cv_rand"))
+    folds = []
+    for i in range(num_folds):
+        held = (df["__cv_rand"] >= i * h) & (df["__cv_rand"] < (i + 1) * h)
+        folds.append((df.filter(~held), df.filter(held)))
+
+    def fit_eval(i: int, j: int) -> float:
+        train, validation = folds[i]
+        model = est.copy(grid[j]).fit(train)
+        return evaluator.evaluate(model.transform(validation, grid[j]))
+
+    target = inheritable_thread_target(dataset.sparkSession)
+    frames = [f for pair in folds for f in pair]
+    for f in frames:
+        f.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    pool = ThreadPool(min(parallelism, num_folds * len(grid) + 1))
+    try:
+        refit = (pool.apply_async(target(est.copy(grid[0]).fit), (dataset,))
+                 if len(grid) == 1 else None)
+        pending = [[pool.apply_async(target(fit_eval), (i, j))
+                    for j in range(len(grid))] for i in range(num_folds)]
+    finally:
+        pool.close()
+        pool.join()
+        for f in frames:
+            f.unpersist()
+    avg = list(np.mean([[r.get() for r in row] for row in pending], axis=0))
+    if refit is not None:
+        return refit.get(), avg
+    best = int(np.argmax(avg) if evaluator.isLargerBetter()
+               else np.argmin(avg))
+    return est.fit(dataset, grid[best]), avg
+
+
 @dataclass
 class FlightDelayPipeline:
     """E1 orchestration: clean → featurize → select → CV-train → eval.
@@ -181,6 +265,8 @@ class FlightDelayPipeline:
     the reference found no measurable difference between the two,
     SURVEY.md §6). ``cv_folds=5`` matches the reference
     (``Main.scala:470-474``); tests lower it for speed.
+    ``parallelism``: how many of a model's fold fits (and its refit)
+    ``cross_validate`` runs at once.
     """
 
     selector_mode: str | None = "fdr"
@@ -249,9 +335,12 @@ class FlightDelayPipeline:
                      models: tuple[str, ...] = ("lr", "dtr", "rf")
                      ) -> dict[str, dict[str, float]]:
         """70/30 split seed 10 (``Main.scala:434-435``), k-fold CV per
-        model (RMSE selector), RMSE + R² on the held-out 30%."""
+        model (``cross_validate``, RMSE selector), RMSE + R² on the
+        held-out 30%. Both splits are narrowed to (label, features)
+        after the split (see the module notes for why not before)."""
+        cols = (LABEL, self.features_col)
         train, test = prepared.randomSplit([0.7, 0.3], seed=self.seed)
-        train = train.cache()
+        train, test = train.select(*cols).cache(), test.select(*cols)
         rmse_eval = RegressionEvaluator(labelCol=LABEL,
                                         predictionCol="prediction",
                                         metricName="rmse")
@@ -260,12 +349,9 @@ class FlightDelayPipeline:
                                       metricName="r2")
         try:
             for name, (est, grid) in self._estimators(models).items():
-                cv = CrossValidator(estimator=est, estimatorParamMaps=grid,
-                                    evaluator=rmse_eval,
-                                    numFolds=self.cv_folds,
-                                    parallelism=self.parallelism,
-                                    seed=self.seed)
-                model = cv.fit(train)
+                model, _ = cross_validate(est, grid, rmse_eval, train,
+                                          self.cv_folds, self.seed,
+                                          self.parallelism)
                 pred = model.transform(test)
                 self.metrics[name] = {
                     "rmse": rmse_eval.evaluate(pred),

@@ -111,9 +111,25 @@ def distinct_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
 def prune_constant_columns(df: DataFrame, force_keep: Sequence[str] = ()) -> DataFrame:
     """P15 (``Main.scala:184-208``): drop every column with ≤1 distinct
     value (nulls counted as a value), except ``force_keep`` (the
-    reference force-keeps ``Year``, ``Main.scala:192``)."""
-    counts = distinct_counts(df).first().asDict()
-    drop = [c for c, n in counts.items() if n <= 1 and c not in force_keep]
+    reference force-keeps ``Year``, ``Main.scala:192``).
+
+    Same decision as ``distinct_counts(df) ≤ 1``, but from plain
+    (non-distinct) aggregates: a column is constant iff it is all NULL,
+    or has no NULL and ``min = max``. Distinct aggregates over many
+    columns are rewritten into an Expand that copies every row once
+    per column; this is one map-side partial aggregate. The equality
+    is evaluated by Spark, so NaN = NaN and -0.0 = 0.0 as in
+    ``count_distinct``'s grouping (not Python's ``nan == nan``).
+    """
+    def constant(c: str) -> Column:
+        n = F.count(F.col(c))
+        return (n == 0) | ((n == F.count(F.lit(1)))
+                           & (F.min(F.col(c)) == F.max(F.col(c))))
+
+    flags = df.agg(*[constant(c).alias(f"c{i}")
+                     for i, c in enumerate(df.columns)]).first()
+    drop = [c for c, const in zip(df.columns, flags)
+            if const and c not in force_keep]
     return df.drop(*drop) if drop else df
 
 

@@ -59,11 +59,21 @@ def test_bucketize_validates_shape():
 
 
 def test_prune_constant_columns(spark):
+    nan = float("nan")
     df = spark.createDataFrame(
-        [(1, "x", None, 7), (2, "x", None, 7)],
-        "id int, const string, allnull string, kept int")
+        [(1, "x", None, 7, "a", nan, -0.0, 1.5),
+         (2, "x", None, 7, None, nan, 0.0, 2.5)],
+        "id int, const string, allnull string, kept int, "
+        "one_and_null string, nan_only double, signed_zero double, "
+        "two double")
     pruned = prune_constant_columns(df, force_keep=("kept",))
-    assert pruned.columns == ["id", "kept"]
+    assert pruned.columns == ["id", "kept", "one_and_null", "two"]
+    # the decision is exactly distinct_counts ≤ 1 (NULL a value, NaN
+    # and ±0.0 by Spark's grouping equality), on rows and on no rows
+    for frame in (df, df.limit(0)):
+        counts = distinct_counts(frame).first().asDict()
+        assert prune_constant_columns(frame).columns == [
+            c for c in frame.columns if counts[c] > 1]
 
 
 def test_prune_constant_columns_empty_input(spark):

@@ -21,8 +21,10 @@ from bigdata_spark_assignment_spark.fixtures import (
     make_planes,
 )
 from bigdata_spark_assignment_spark.ml.flight_delay import (
+    LABEL,
     FlightDelayPipeline,
     clean_flights,
+    cross_validate,
     featurize,
 )
 
@@ -51,6 +53,75 @@ def csv_tables(spark, fixture_tables, tmp_path_factory):
     return tuple(frames)
 
 
+@pytest.fixture(scope="module")
+def prepared_4k(fixture_tables):
+    """The 4k fixture through ``prepare`` (fdr), cached, with its
+    pipeline (``cv_folds=3``)."""
+    pipe = FlightDelayPipeline(selector_mode="fdr", cv_folds=3)
+    prepared = pipe.prepare(*fixture_tables).cache()
+    yield pipe, prepared
+    prepared.unpersist()
+
+
+@pytest.mark.parametrize("model", ["lr", "dtr"])
+def test_cross_validate_matches_crossvalidator(spark, prepared_4k, model):
+    """Differential: ``cross_validate`` (fold-parallel) gives bit-equal
+    ``avgMetrics`` and held-out RMSE to pyspark's CrossValidator, on
+    ``fit_evaluate``'s narrowed 70/30 split. The 2-point LR grid refits
+    after the folds; the 1-point DTR grid refits concurrently."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+    from pyspark.ml.regression import DecisionTreeRegressor, LinearRegression
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+
+    pipe, prepared = prepared_4k
+    cols = (LABEL, pipe.features_col)
+    train, test = prepared.randomSplit([0.7, 0.3], seed=pipe.seed)
+    train, test = train.select(*cols).cache(), test.select(*cols)
+    if model == "lr":
+        est = LinearRegression(featuresCol=pipe.features_col, labelCol=LABEL,
+                               maxIter=10)
+        grid = ParamGridBuilder().addGrid(est.regParam, [0.01, 0.5]).build()
+    else:
+        est = DecisionTreeRegressor(featuresCol=pipe.features_col,
+                                    labelCol=LABEL, seed=pipe.seed)
+        grid = ParamGridBuilder().build()
+    rmse = RegressionEvaluator(labelCol=LABEL, metricName="rmse")
+    try:
+        want = CrossValidator(estimator=est, estimatorParamMaps=grid,
+                              evaluator=rmse, numFolds=pipe.cv_folds,
+                              parallelism=pipe.parallelism,
+                              seed=pipe.seed).fit(train)
+        got, avg = cross_validate(est, grid, rmse, train, pipe.cv_folds,
+                                  pipe.seed, pipe.parallelism)
+        assert avg == list(want.avgMetrics)
+        assert (rmse.evaluate(got.transform(test))
+                == rmse.evaluate(want.bestModel.transform(test)))
+    finally:
+        train.unpersist()
+
+
+def test_fit_evaluate_jobs_stay_in_callers_job_group(spark, prepared_4k):
+    """Every job ``fit_evaluate`` submits — the fold fits run on pool
+    threads — carries the caller's job group, so per-group accounting
+    (job counts, tracing, cancellation) sees all of them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    pipe, prepared = prepared_4k
+    bus.waitUntilEmpty(60_000)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "fit_evaluate job-group test")
+    try:
+        pipe.fit_evaluate(prepared, models=("lr",))
+    finally:
+        sc.setJobGroup(None, None)
+    bus.waitUntilEmpty(60_000)
+    leaked = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    grouped = sorted(tracker.getJobIdsForGroup("g"))
+    assert grouped and not leaked, (grouped, sorted(leaked))
+    assert grouped == list(range(grouped[0], grouped[-1] + 1)), grouped
+
+
 def test_prepare_cuts_csv_lineage(spark, csv_tables):
     """The cleaned frame is materialized once inside ``prepare``: the
     prepared plan reads checkpointed blocks, not the CSV files (the
@@ -66,8 +137,6 @@ def test_prepare_matches_uncut_lineage(spark, csv_tables):
     """Differential: the cut changes no row and no selected feature
     versus featurize(clean_flights(...)) + the same selector, lazy."""
     from pyspark.ml.feature import UnivariateFeatureSelector
-
-    from bigdata_spark_assignment_spark.ml.flight_delay import LABEL
 
     flights, planes = csv_tables
     pipe = FlightDelayPipeline(selector_mode="fdr")
@@ -160,8 +229,6 @@ def test_fdr_fwe_selector_equivalence(spark, fixture_tables):
     FWE (family-wise, Bonferroni-shaped) can never be MORE permissive
     than FDR (Benjamini-Hochberg)."""
     from pyspark.ml.feature import UnivariateFeatureSelector
-
-    from bigdata_spark_assignment_spark.ml.flight_delay import LABEL
 
     flights, planes = fixture_tables
     df = featurize(clean_flights(flights, planes)) \
