@@ -108,29 +108,38 @@ def distinct_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
     return df.agg(*[distinct_count_expr(F.col(c)).alias(c) for c in cols])
 
 
+def constant_expr(c: str) -> Column:
+    """Aggregate expression: true iff column ``c`` has ≤1 distinct value,
+    NULL counted as a value — it is all NULL, or has no NULL and
+    ``min = max``. The decision of ``distinct_count_expr(c) <= 1``, but
+    from plain aggregates: one map-side partial aggregate, where
+    ``count_distinct`` plans two shuffles (and an Expand copying every
+    row once per column when there are several). The equality is
+    Spark's, so NaN = NaN and -0.0 = 0.0 as in ``count_distinct``.
+    """
+    n = F.count(F.col(c))
+    return (n == 0) | ((n == F.count(F.lit(1)))
+                       & (F.min(F.col(c)) == F.max(F.col(c))))
+
+
 def prune_constant_columns(df: DataFrame, force_keep: Sequence[str] = ()) -> DataFrame:
     """P15 (``Main.scala:184-208``): drop every column with ≤1 distinct
     value (nulls counted as a value), except ``force_keep`` (the
-    reference force-keeps ``Year``, ``Main.scala:192``).
-
-    Same decision as ``distinct_counts(df) ≤ 1``, but from plain
-    (non-distinct) aggregates: a column is constant iff it is all NULL,
-    or has no NULL and ``min = max``. Distinct aggregates over many
-    columns are rewritten into an Expand that copies every row once
-    per column; this is one map-side partial aggregate. The equality
-    is evaluated by Spark, so NaN = NaN and -0.0 = 0.0 as in
-    ``count_distinct``'s grouping (not Python's ``nan == nan``).
+    reference force-keeps ``Year``, ``Main.scala:192``). One
+    ``constant_expr`` per column, all in one aggregation.
     """
-    def constant(c: str) -> Column:
-        n = F.count(F.col(c))
-        return (n == 0) | ((n == F.count(F.lit(1)))
-                           & (F.min(F.col(c)) == F.max(F.col(c))))
-
-    flags = df.agg(*[constant(c).alias(f"c{i}")
+    flags = df.agg(*[constant_expr(c).alias(f"c{i}")
                      for i, c in enumerate(df.columns)]).first()
     drop = [c for c, const in zip(df.columns, flags)
             if const and c not in force_keep]
     return df.drop(*drop) if drop else df
+
+
+def means_frame(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """1-row frame of the column means, one ``__mean_<c>`` per column
+    (NULL for a column with no non-null value) — the fitted statistic
+    of ``impute_mean``."""
+    return df.agg(*[F.avg(c).alias(f"__mean_{c}") for c in cols])
 
 
 def impute_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -138,50 +147,23 @@ def impute_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     mean. One aggregation job producing a 1-row frame, broadcast back —
     the scalar-subquery pattern, no driver round-trip in the plan.
     """
-    means = df.agg(*[F.avg(c).alias(f"__mean_{c}") for c in cols])
-    out = df.crossJoin(F.broadcast(means))
+    out = df.crossJoin(F.broadcast(means_frame(df, cols)))
     out = out.withColumns(
         {c: F.coalesce(F.col(c), F.col(f"__mean_{c}")) for c in cols})
     return out.drop(*[f"__mean_{c}" for c in cols])
 
 
-def mode_of(df: DataFrame, col: str) -> DataFrame:
-    """A6: most frequent non-null value, ties broken by the smaller
-    value (deterministic — the reference's Imputer breaks ties
-    arbitrarily; we pin the semantics so an oracle can express it)."""
-    return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(col).agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy(F.col("__n").desc(), F.col(col).asc())
-        .limit(1)
-        .select(F.col(col).alias(f"__mode_{col}"))
-    )
-
-
-def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """A6/M1 (``Main.scala:262-267``): replace NULLs with each column's
-    mode (deterministic tie-break: highest count, then smallest value —
-    see ``mode_of``), ALL columns in one aggregation pipeline.
+def modes_frame(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """1-row frame of the column modes as strings, one ``__mode_<c>``
+    per column — the fitted statistic of ``impute_mode``.
 
     Single-pass: rows explode to (column, value) pairs → one grouped
     count → one window pick per column → one global aggregate collapses
-    the per-column modes into a 1-row frame that is broadcast back.
-    The r1 form looped one aggregation job + one crossJoin per column
-    (the reference's own per-column-job smell, SURVEY.md §4.1).
-
-    Values ride the pair frame as strings (Spark's casts round-trip
-    for numeric/date/string types) but the tie-break orders by the
-    NATIVE value (numeric columns by double, others lexically), so
-    semantics match ``mode_of`` exactly. A column with zero non-null
-    values yields a NULL mode and its NULLs are left in place — the
-    1-row global aggregate cannot annihilate the crossJoin the way an
-    empty per-column mode frame could.
+    the per-column modes into one row. Values ride the pair frame as
+    strings (Spark's casts round-trip for numeric/date/string types)
+    but the tie-break orders by the NATIVE value (numeric columns by
+    double, others lexically).
     """
-    from pyspark.sql import Window as W
-
-    cols = list(cols)
-    if not cols:
-        return df
     numeric = {f.name for f in df.schema.fields
                if f.dataType.typeName() in
                ("byte", "short", "integer", "long", "float", "double",
@@ -205,10 +187,29 @@ def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         .filter(F.col("rn") == 1)
     # global aggregate → exactly ONE row even if every column was
     # all-null (ADVICE r1: an empty mode frame must not wipe the data)
-    modes = top.agg(*[
+    return top.agg(*[
         F.max(F.when(F.col("col") == c, F.col("val")))
         .cast("string").alias(f"__mode_{c}") for c in cols])
-    out = df.crossJoin(F.broadcast(modes))
+
+
+def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """A6/M1 (``Main.scala:262-267``): replace NULLs with each column's
+    mode — the most frequent non-null value, ties broken by the smaller
+    value (deterministic: the reference's Imputer breaks ties
+    arbitrarily; the rule is pinned so an oracle can express it) — ALL
+    columns in one aggregation pipeline (``modes_frame``) whose 1-row
+    result is broadcast back. The r1 form looped one aggregation job +
+    one crossJoin per column (the reference's own per-column-job smell,
+    SURVEY.md §4.1).
+
+    A column with zero non-null values yields a NULL mode and its NULLs
+    are left in place — the 1-row global aggregate cannot annihilate
+    the crossJoin the way an empty per-column mode frame could.
+    """
+    cols = list(cols)
+    if not cols:
+        return df
+    out = df.crossJoin(F.broadcast(modes_frame(df, cols)))
     out = out.withColumns(
         {c: F.coalesce(
             F.col(c),

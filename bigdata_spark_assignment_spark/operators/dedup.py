@@ -438,9 +438,7 @@ def neardup_pairs_simhash(docs: DataFrame, id_col: str, text_col: str,
 
 def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
                      checkpoint_dir: str | None = None,
-                     round_stats: list | None = None,
-                     eager_checkpoint: bool = True,
-                     persist_edges: bool = True) -> DataFrame:
+                     round_stats: list | None = None) -> DataFrame:
     """Connected components over a near-dup pair graph → (id,
     cluster_id) with cluster_id = min id reachable through pairs.
 
@@ -479,17 +477,16 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
             out = df.checkpoint(eager=True)
             return out
     else:
-        # r12 adjudication (VERDICT r11 #1): r11 shipped LAZY local
+        # eager, not lazy (r12, VERDICT r11 #1): r11 shipped LAZY local
         # checkpoints (one job per round instead of two) and the
         # driver's scored run regressed q53 5.9→11.3s at local[32]
-        # with 0.71 anti-scaling. The r12 A/B matrix (tools/ab_cc.py,
-        # fresh JVM per cell, bench-shaped median-of-3, BOTH driver
-        # core counts) reads: eager wins every paired comparison —
-        # 32c lazy+persist 10.7s vs eager+persist 7.05s; 8c 9.07 vs
-        # 8.41 — so the default is eager again; the edge-list persist
+        # with 0.71 anti-scaling. The r12 A/B (fresh JVM per cell,
+        # bench-shaped median-of-3, BOTH driver core counts) had eager
+        # win every paired comparison — 32c lazy+persist 10.7s vs
+        # eager+persist 7.05s; 8c 9.07 vs 8.41; the edge-list persist
         # (the scale-evidenced half of the r11 change) stays.
         def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager_checkpoint)
+            return df.localCheckpoint(eager=True)
 
     edges = (pairs.select(F.col("id_a").alias("src"),
                           F.col("id_b").alias("dst"))
@@ -500,10 +497,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
     # discipline: without it every round's join re-runs the
     # union+distinct shuffle from the pair graph (r11; at cluster
     # scale that is one full edge shuffle per round saved).
-    # persist_edges=False restores the r10 recompute-per-round shape
-    # (the r12 A/B knob).
-    if persist_edges:
-        edges = _track_persist(edges)
+    edges = _track_persist(edges)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     labels = _cut(labels)
@@ -556,8 +550,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
 
 def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
                           checkpoint_dir: str | None = None,
-                          round_stats: list | None = None,
-                          eager_checkpoint: bool = True) -> DataFrame:
+                          round_stats: list | None = None) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., *Connected Components in MapReduce and Beyond*,
     SoCC'14) → (id, cluster_id) with cluster_id = min id in the
@@ -589,11 +582,11 @@ def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
         def _cut(df: DataFrame) -> DataFrame:
             return df.checkpoint(eager=True)
     else:
-        # eager by default again (r12) — same adjudication as
-        # neardup_clusters above: the r11 lazy variant lost the
-        # driver-shaped A/B at both core counts (tools/ab_cc.py).
+        # eager (r12) — same adjudication as neardup_clusters above:
+        # the r11 lazy variant lost the driver-shaped A/B at both core
+        # counts.
         def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager_checkpoint)
+            return df.localCheckpoint(eager=True)
 
     # Undirected edge set as (u, v) canonical pairs, self-loops dropped.
     edges = (pairs.select(F.col("id_a").alias("u"),

@@ -29,16 +29,6 @@ def distinct_count_expr(col: Column) -> Column:
     ).cast("long")
 
 
-def distinct_count(df: DataFrame, col: str | Column) -> int:
-    """Eager form: distinct count (null counted) as a Python int.
-
-    Used for join guards like the reference's ``Main.scala:132-139``
-    (join only if the key has >1 distinct value).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return df.agg(distinct_count_expr(c).alias("n")).first()["n"]
-
-
 def top_k_per_group(df: DataFrame, group_cols: list[str],
                     order_by: list[Column], k: int,
                     rank_col: str = "rn") -> DataFrame:
@@ -54,17 +44,6 @@ def top_k_per_group(df: DataFrame, group_cols: list[str],
     w = W.partitionBy(*group_cols).orderBy(*order_by)
     return (df.withColumn(rank_col, F.row_number().over(w))
               .filter(F.col(rank_col) <= k))
-
-
-def join_guarded(fact: DataFrame, dim: DataFrame, on: str,
-                 how: str = "inner", broadcast_dim: bool = True) -> DataFrame:
-    """Conditional join (J2, ``Main.scala:132-139``): join only when the
-    key actually discriminates (>1 distinct value on the fact side);
-    otherwise return the fact unchanged."""
-    if distinct_count(fact, on) <= 1:
-        return fact
-    right = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(right, on, how)
 
 
 def asof_join(left: DataFrame, right: DataFrame, key_cols: list[str],

@@ -122,28 +122,93 @@ def test_fit_evaluate_jobs_stay_in_callers_job_group(spark, prepared_4k):
     assert grouped == list(range(grouped[0], grouped[-1] + 1)), grouped
 
 
+def reference_clean(flights, planes):
+    """The lazy form of ``clean_flights``, as a reference: broadcast
+    join (TailNum discriminates in the fixtures), then the registered
+    operators ``prune_constant_columns``, ``impute_mode`` and
+    ``impute_mean``, whose statistics are cross-joined 1-row frames
+    over the whole upstream plan."""
+    from bigdata_spark_assignment_spark.ml.flight_delay import (
+        MEAN_IMPUTE_COLS,
+        MODE_IMPUTE_COLS,
+        NUMERIC_COLS,
+    )
+    from bigdata_spark_assignment_spark.operators.cleaning import (
+        day_part_expr,
+        derived_age_expr,
+        impute_mean,
+        impute_mode,
+        na_to_null,
+        null_to_unknown,
+        prune_constant_columns,
+    )
+
+    df = flights.drop(*FORBIDDEN_COLUMNS)
+    df = df.filter(F.col(LABEL).isNotNull() & (F.col(LABEL) != "NA"))
+    df = df.filter(F.col("Cancelled") == "0").drop("Cancelled",
+                                                   "CancellationCode")
+    dim = planes.drop("status", "year").filter(
+        F.col("issue_date").isNotNull()
+        & ~F.col("issue_date").isin("None", "NA")
+        & F.col("manufacturer").isNotNull())
+    df = df.join(F.broadcast(dim.withColumnRenamed("tailnum", "TailNum")),
+                 "TailNum")
+    df = na_to_null(df)
+    df = df.withColumns({c: F.col(c).cast("int") for c in NUMERIC_COLS})
+    df = prune_constant_columns(df, force_keep=("Year",))
+    df = impute_mode(df, [c for c in MODE_IMPUTE_COLS if c in df.columns])
+    df = impute_mean(df, [c for c in MEAN_IMPUTE_COLS if c in df.columns])
+    df = df.withColumn(
+        "PlaneAge", derived_age_expr(F.col("Year"), F.col("issue_date"))) \
+        .drop("issue_date")
+    df = df.filter(F.col("PlaneAge").isNotNull())
+    df = null_to_unknown(df, [c for c in ("UniqueCarrier", "Origin", "Dest",
+                                          "type", "manufacturer", "model",
+                                          "aircraft_type", "engine_type")
+                              if c in df.columns])
+    df = df.filter((F.col("DepTime") <= 2400) & (F.col("CRSArrTime") <= 2400))
+    df = df.withColumns({
+        "DepTimeDayPart": day_part_expr(F.col("DepTime")),
+        "CRSArrTimeDayPart": day_part_expr(F.col("CRSArrTime")),
+    }).drop("DepTime", "CRSArrTime")
+    return df.drop("FlightNum", "TailNum")
+
+
 def test_prepare_cuts_csv_lineage(spark, csv_tables):
-    """The cleaned frame is materialized once inside ``prepare``: the
-    prepared plan reads checkpointed blocks, not the CSV files (the
-    lazy lineage re-scans them 8 times per consumer)."""
+    """The cleaned frame's plan is the cut plus narrow operators: no
+    CSV scan downstream of ``prepare``, and no cross-joined statistic
+    (they re-enter as literals)."""
     flights, planes = csv_tables
     prepared = FlightDelayPipeline(selector_mode="fdr").prepare(
         flights, planes)
     plan = prepared._jdf.queryExecution().executedPlan().toString()
     assert "FileScan csv" not in plan, plan
+    cleaned = clean_flights(flights, planes)
+    plan = cleaned._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan csv" not in plan, plan
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in plan, plan
 
 
 def test_prepare_matches_uncut_lineage(spark, csv_tables):
-    """Differential: the cut changes no row and no selected feature
-    versus featurize(clean_flights(...)) + the same selector, lazy."""
+    """Differential: the fitted, literal cleaning gives the same
+    multiset of cleaned rows as ``reference_clean``, and ``prepare``
+    the same selected features and (label, selectedFeatures) rows as
+    featurize(reference_clean(...)) + the same selector, lazy."""
     from pyspark.ml.feature import UnivariateFeatureSelector
 
     flights, planes = csv_tables
+    cleaned, uncut = clean_flights(flights, planes), \
+        reference_clean(flights, planes)
+    assert cleaned.dtypes == uncut.dtypes
+    got, want = (Counter(tuple(r) for r in df.collect())
+                 for df in (cleaned, uncut))
+    assert sum(got.values()) > 2000
+    assert got == want
+
     pipe = FlightDelayPipeline(selector_mode="fdr")
     prepared = pipe.prepare(flights, planes)
-
-    uncut = featurize(clean_flights(flights, planes)) \
-        .withColumn(LABEL, F.col(LABEL).cast("double"))
+    uncut = featurize(uncut).withColumn(LABEL, F.col(LABEL).cast("double"))
     sel = UnivariateFeatureSelector(
         featuresCol="normFeatures", outputCol="selectedFeatures",
         labelCol=LABEL, selectionMode="fdr")
@@ -157,9 +222,28 @@ def test_prepare_matches_uncut_lineage(spark, csv_tables):
                        for r in df.select(LABEL, "selectedFeatures")
                        .collect())
 
-    got, want = rows(prepared), rows(model.transform(uncut))
-    assert sum(got.values()) > 2000
-    assert got == want
+    assert rows(prepared) == rows(model.transform(uncut))
+
+
+def test_clean_flights_skips_join_on_constant_tailnum(spark):
+    """J2 guard, skip path: with one TailNum value the planes are not
+    joined, so no plane column and no PlaneAge exist, and every fact
+    row that passes the label, cancellation and hhmm filters is kept
+    (NA times are mean-imputed before the hhmm filter)."""
+    flights = make_flights(spark, n=500).withColumn("TailNum", F.lit("N1"))
+    df = clean_flights(flights, make_planes(spark, n=100))
+    assert not set(df.columns) & {"PlaneAge", "issue_date", "manufacturer",
+                                  "model", "type", "engine_type"}
+    for c in ("Month", "DepDelay", "TaxiOut", "CRSDepTime"):
+        assert df.filter(F.col(c).isNull()).count() == 0, c
+
+    def hhmm_ok(v):
+        return v == "NA" or int(v) <= 2400
+
+    want = sum(1 for r in flights.collect()
+               if r[LABEL] != "NA" and r.Cancelled == "0"
+               and hhmm_ok(r.DepTime) and hhmm_ok(r.CRSArrTime))
+    assert df.count() == want > 400
 
 
 def test_clean_flights_contract(spark, fixture_tables):
