@@ -152,8 +152,8 @@ def _warm_plans(spark, registry, exclude: set, sf_dir: str) -> None:
     BENCH_DETAIL.json ``measurement.warmup``. Failures are
     non-fatal: a slot that cannot warm still gets timed (cold) in
     the scored loop, which will surface the real error."""
-    from bigdata_spark_assignment_spark.operators.dedup import (
-        unpersist_dedup_caches,
+    from bigdata_spark_assignment_spark.cache import (
+        release as unpersist_dedup_caches,
     )
 
     # warm on the smallest sibling fixture of the benched dir (sf0.001
@@ -258,8 +258,8 @@ def main() -> None:
         # frames; without the drain, the NEXT slot's persists could
         # evict frames this loop no longer needs anyway, and memory
         # accumulates across 46 slots
-        from bigdata_spark_assignment_spark.operators.dedup import (
-            unpersist_dedup_caches,
+        from bigdata_spark_assignment_spark.cache import (
+            release as unpersist_dedup_caches,
         )
 
         unpersist_dedup_caches()

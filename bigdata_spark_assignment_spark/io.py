@@ -25,6 +25,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import cache
+
 # ---------------------------------------------------------------------------
 # Declared schemas for the driver's tables (FIXTURES.md §B).
 # ---------------------------------------------------------------------------
@@ -165,8 +167,9 @@ def fanout_cache(df: DataFrame, n: int | None = None) -> DataFrame:
     single-task scan. With the persist, the input is shuffled ONCE and
     the N heavy passes read a parallelism-wide cache — at sf0.1 this
     turned the q36 six-pass slot from serial single-core tokenization
-    into 32-way cached passes. The persist is tracked in the dedup
-    FIFO scope (bounded; released by scope exit or eviction).
+    into 32-way cached passes. The persist is query-scoped
+    (``cache.persist``: released when the next registered query
+    starts).
 
     ``n`` picks the fan-out width. Default = session parallelism —
     right when the passes are genuinely CPU-bound (regex scoring, NB
@@ -182,10 +185,9 @@ def fanout_cache(df: DataFrame, n: int | None = None) -> DataFrame:
     explicitly the small-input/multi-pass shape. The repartition is
     Spark's sort-based round-robin (deterministic).
     """
-    from .operators.dedup import _track_persist
 
     spark = df.sparkSession
-    return _track_persist(
+    return cache.persist(
         df.repartition(n or spark.sparkContext.defaultParallelism))
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .. import cache
 from .relational import distinct_count_expr
 
 # Reference value lists (``Main.scala:13-25``): tokens normalized to
@@ -396,9 +397,7 @@ def dsir_select(docs: DataFrame, text_col: str, target_pred: Column,
     # aggregate over it, so the occurrence stream is scanned exactly
     # twice end-to-end — counts here, scoring below (r7: the previous
     # shape re-tokenized the corpus four times)
-    from .dedup import _track_persist
-
-    grouped = _track_persist(
+    grouped = cache.persist(
         tb.groupBy("b").agg(
             F.count(F.lit(1)).alias("rc"),
             F.sum(F.col("__t").cast("long")).alias("tc")))

@@ -21,7 +21,6 @@ no Python in the hot path, no driver-side state.
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import time
 
@@ -32,61 +31,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..session import exclude_infer_filters_from_generate
 from .textual import shingles_expr
-
-# Persisted intermediates (signature/index frames) are tracked per
-# SCOPE (ADVICE r2: a module-global list let one caller's release drop
-# another caller's caches, and direct operator calls grew it without
-# bound). ``dedup_cache_scope()`` gives a caller its own scope whose
-# caches are released on exit (pipelines.prepare_corpus runs its
-# actions inside one); operators called OUTSIDE any scope fall back to
-# a bounded FIFO — beyond ``_FALLBACK_CAP`` frames the oldest is
-# unpersisted (safe: Spark recomputes on next use).
-# r8: 8 was too tight — one q53 run legitimately holds ~12 live
-# frames (docs fan-out, pair graph, per-algorithm edge/vertex
-# frames), so the FIFO evicted the MinHash pair graph MID-QUERY and
-# the evicted sweep recomputed (bench sample swing 8.9s → 17.4s).
-# The frames are narrow per-query intermediates; 32 of them fit any
-# executor profile we target, and bench.py additionally drains the
-# pool between suite slots (unpersist_dedup_caches).
-_FALLBACK_CAP = 32
-_SCOPES: list[list[DataFrame]] = [[]]  # [0] = bounded global fallback
-
-
-@contextlib.contextmanager
-def dedup_cache_scope():
-    """Scope dedup-operator persists to this block: every intermediate
-    persisted inside is unpersisted on exit, touching nothing persisted
-    by other callers."""
-    scope: list[DataFrame] = []
-    _SCOPES.append(scope)
-    try:
-        yield scope
-    finally:
-        _SCOPES.pop()
-        for df in scope:
-            df.unpersist()
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    scope = _SCOPES[-1]
-    scope.append(df)
-    if len(_SCOPES) == 1 and len(scope) > _FALLBACK_CAP:
-        scope.pop(0).unpersist()
-    return df
-
-
-def unpersist_dedup_caches() -> int:
-    """Release every intermediate persisted OUTSIDE an explicit scope;
-    returns the count. Safe while results are still referenced — Spark
-    recomputes on next use."""
-    fallback = _SCOPES[0]
-    n = len(fallback)
-    while fallback:
-        fallback.pop().unpersist()
-    return n
 
 
 def dedup_exact(df: DataFrame, subset: list[str],
@@ -230,9 +177,9 @@ def neardup_pairs_minhash(docs: DataFrame, id_col: str, text_col: str,
     # The signature frame feeds FOUR branches (both self-join sides +
     # both verify sides); without persist each branch re-runs
     # scan→shingle→hash→Python. MEMORY_AND_DISK ≈ shingle+sig size
-    # (~4× text bytes) — the standard dedup-pipeline trade. LRU evicts
-    # across repeated calls.
-    sig = _track_persist(sig)
+    # (~4× text bytes) — the standard dedup-pipeline trade. Released
+    # when the next registered query starts (``cache``).
+    sig = cache.persist(sig)
 
     exploded = sig.select(
         "id", F.posexplode("bh").alias("band", "band_hash"))
@@ -274,7 +221,7 @@ def neardup_pairs_exact_jaccard(docs: DataFrame, id_col: str, text_col: str,
                         shingles_expr(F.col(text_col), k_shingle).alias("sh"))
                 .filter(F.size("sh") > 0))
     # persist: both self-join sides read the exploded index
-    ex = _track_persist(
+    ex = cache.persist(
         shingled.select("id", F.size("sh").alias("sz"),
                         F.explode("sh").alias("shingle")))
     a, b = ex.alias("a"), ex.alias("b")
@@ -431,7 +378,7 @@ def neardup_pairs_simhash(docs: DataFrame, id_col: str, text_col: str,
         F.col(id_col).alias("id"),
         simhash(F.transform(words_expr(F.col(text_col)),
                             lambda t: F.xxhash64(t))).alias("sim"))
-    sh = _track_persist(sh)
+    sh = cache.persist(sh)
     return neardup_pairs_hamming64(sh, "id", "sim",
                                    max_hamming=max_hamming)
 
@@ -497,7 +444,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
     # discipline: without it every round's join re-runs the
     # union+distinct shuffle from the pair graph (r11; at cluster
     # scale that is one full edge shuffle per round saved).
-    edges = _track_persist(edges)
+    edges = cache.persist(edges)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     labels = _cut(labels)
@@ -754,7 +701,7 @@ def shared_window_stats(docs: DataFrame, window_tokens: int = 10,
     uh = window_hash_arrays_udf(window_tokens)
     wins = docs.select(F.col(id_col).alias("__id"),
                        F.explode(uh(F.col(text_col))).alias("__gh"))
-    per_doc = _track_persist(
+    per_doc = cache.persist(
         wins.groupBy("__gh", "__id").agg(F.count(F.lit(1)).alias("__occ")))
     shared = (per_doc.groupBy("__gh")
               .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -902,7 +849,7 @@ def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
                                            F.col("id_a").alias("dst")))
                  .distinct())
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        edgesd = _track_persist(
+        edgesd = cache.persist(
             edges.join(deg, "src").select("src", "dst", "deg",
                                           F.lit(None).alias("w")))
         contrib_num = F.col("rank") / F.col("deg")
@@ -916,10 +863,10 @@ def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
                      F.col(weight_col).cast("double").alias("w")))
                  .groupBy("src", "dst").agg(F.sum("w").alias("w")))
         deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
-        edgesd = _track_persist(
+        edgesd = cache.persist(
             edges.join(deg, "src").select("src", "dst", "deg", "w"))
         contrib_num = F.col("rank") * F.col("w") / F.col("deg")
-    verts = _track_persist(
+    verts = cache.persist(
         edges.select(F.col("src").alias("id")).distinct())
     nstats = verts.agg(F.count(F.lit(1)).alias("n"))
     # (1-d) precomputed in Python and embedded as ONE double literal
@@ -1046,7 +993,7 @@ def neardup_pairs_prefix_jaccard(docs: DataFrame, id_col: str,
     verify joins candidate ids back to the persisted full shingle
     sets, exactly as the LSH path does.
     """
-    sh = _track_persist(
+    sh = cache.persist(
         docs.select(F.col(id_col).alias("id"),
                     shingles_expr(F.col(text_col), k_shingle).alias("sh"))
         .filter(F.size("sh") > 0))
@@ -1185,7 +1132,7 @@ def bfs_hops(pairs: DataFrame, seeds: DataFrame,
              .unionByName(pairs.select(F.col("id_b").alias("src"),
                                        F.col("id_a").alias("dst")))
              .distinct())
-    edges = _track_persist(edges)
+    edges = cache.persist(edges)
     visited = seeds.select(F.col("id").cast("long")) \
                    .withColumn("hops", F.lit(0).cast("long"))
     visited = visited.localCheckpoint(eager=True)
@@ -1286,7 +1233,7 @@ def sssp(pairs: DataFrame, seeds: DataFrame,
                                        F.col("id_a").alias("dst"),
                                        F.col(weight_col).alias("w")))
              .groupBy("src", "dst").agg(F.min("w").alias("w")))
-    edges = _track_persist(edges)
+    edges = cache.persist(edges)
     dist = (seeds.select(F.col("id").cast("long"))
             .withColumn("dist", F.lit(0).cast("long"))
             .localCheckpoint(eager=True))
@@ -1390,7 +1337,7 @@ def kcore_membership(pairs: DataFrame, k: int, max_rounds: int = 8,
              .unionByName(pairs.select(F.col("id_b").alias("src"),
                                        F.col("id_a").alias("dst")))
              .distinct())
-    edges = _track_persist(edges)
+    edges = cache.persist(edges)
     for rnd in range(1, max_rounds + 1):
         keep = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("__d"))
                 .filter(F.col("__d") >= k).select("src"))
@@ -1459,7 +1406,7 @@ def dbscan_from_pairs(pairs: DataFrame, component_labels: DataFrame,
            .unionByName(pairs.select(F.col("id_b").alias("id"),
                                      F.col("id_a").alias("nbr"))))
     deg = adj.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    core = _track_persist(
+    core = cache.persist(
         deg.filter(F.col("deg") + 1 >= min_pts).select("id"))
 
     ce = (pairs.join(core.select(F.col("id").alias("id_a")), "id_a")
@@ -1494,12 +1441,12 @@ def dbscan_from_pairs(pairs: DataFrame, component_labels: DataFrame,
                .applyInPandas(_uf, "id long, cl long"))
     isolated = (core.join(core_cc, "id", "left_anti")
                 .select("id", F.col("id").alias("cl")))
-    ccore = _track_persist(core_cc.unionByName(isolated))
+    ccore = cache.persist(core_cc.unionByName(isolated))
     border = (adj.join(ccore.select(F.col("id").alias("nbr"), "cl"),
                        "nbr")
               .join(core, "id", "left_anti")
               .groupBy("id").agg(F.min("cl").alias("cl")))
-    return {"core": ccore, "border": _track_persist(border)}
+    return {"core": ccore, "border": cache.persist(border)}
 
 
 def label_propagation(pairs: DataFrame, rounds: int = 4) -> DataFrame:
@@ -1533,7 +1480,7 @@ def label_propagation(pairs: DataFrame, rounds: int = 4) -> DataFrame:
            .unionByName(pairs.select(F.col("id_b").alias("id"),
                                      F.col("id_a").alias("nbr")))
            .distinct())
-    adj = _track_persist(adj)
+    adj = cache.persist(adj)
     labels = adj.select("id").distinct().withColumn("label", F.col("id"))
     for _ in range(rounds):
         nbr_lab = adj.join(

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _track_persist
+from .. import cache
 
 
 def basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
@@ -63,8 +63,9 @@ def frequent_items(baskets: DataFrame, min_count: int) -> DataFrame:
 def _pair_counts(baskets: DataFrame, keep_items: DataFrame,
                  max_basket_items: int | None) -> DataFrame:
     """Apriori-pruned co-partitioned pair counting: (item_a < item_b,
-    pair_count), one basket-keyed exchange, persisted and scope-tracked
-    for the two self-join branches."""
+    pair_count), one basket-keyed exchange, persisted (``cache.persist``,
+    released when the next query starts) for the two self-join
+    branches."""
     pruned = baskets.join(F.broadcast(keep_items.select("item")), "item",
                           "left_semi")
     if max_basket_items is not None:
@@ -73,7 +74,7 @@ def _pair_counts(baskets: DataFrame, keep_items: DataFrame,
                  .filter(F.col("__bsz") <= int(max_basket_items))
                  .select("basket"))
         pruned = pruned.join(sizes, "basket", "left_semi")
-    pruned = _track_persist(pruned.repartition("basket"))
+    pruned = cache.persist(pruned.repartition("basket"))
     a = pruned.select("basket", F.col("item").alias("item_a"))
     b = pruned.select("basket", F.col("item").alias("item_b"))
     return (a.join(b, "basket")
@@ -114,13 +115,13 @@ def association_rules(df: DataFrame, basket_col: str, item_col: str,
 
     All three metrics are plain ratios of exact counts — the q72
     oracle re-derives every row digit-for-digit."""
-    baskets = _track_persist(
+    baskets = cache.persist(
         basket_items(df, basket_col, item_col))
     n_baskets = baskets.select(
         F.countDistinct("basket").alias("n_baskets"))
     items = (frequent_items(baskets, 1)
              .crossJoin(F.broadcast(n_baskets)))
-    items_f = _track_persist(items.filter(
+    items_f = cache.persist(items.filter(
         F.col("item_count") >= F.ceil(F.lit(float(min_support))
                                       * F.col("n_baskets"))))
     pairs = (_pair_counts(baskets, items_f, max_basket_items)

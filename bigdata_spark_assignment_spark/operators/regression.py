@@ -22,6 +22,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import cache
+
 __all__ = ["isotonic_fit", "grouped_ols", "theil_sen_slope",
            "mann_kendall"]
 
@@ -292,14 +294,13 @@ def split_conformal_ols(df: DataFrame, group_col: str, x_col: str,
     vxy = n * F.col("sxy") - F.col("sx") * F.col("sy")
     slope = F.when((F.col("n_train") >= 2) & (vxx != 0), vxy / vxx)
     intercept = (F.col("sy") - slope * F.col("sx")) / n
-    from .dedup import _track_persist
 
     # fit feeds the calibration join, the test join AND the output
     # row; qhat feeds test + output. Persist both (|groups| rows) or
     # each consumer re-runs the train aggregate / the calibration
     # rank window (identical sibling subtrees are never folded).
-    fit = _track_persist(tr.select("grp", "n_train", slope.alias("b1"),
-                                   intercept.alias("b0")))
+    fit = cache.persist(tr.select("grp", "n_train", slope.alias("b1"),
+                                  intercept.alias("b0")))
 
     resid = F.abs(F.col("y") - (F.col("b0") + F.col("b1") * F.col("x")))
     # drop NULL residuals (degenerate NULL-fit groups) BEFORE the
@@ -317,7 +318,7 @@ def split_conformal_ols(df: DataFrame, group_col: str, x_col: str,
     cum = F.sum("c").over(wcum)
     n_cal = F.sum("c").over(wall)
     k = F.ceil((n_cal + 1) * F.lit(1.0 - alpha))
-    qhat = _track_persist(
+    qhat = cache.persist(
         rc.select("grp", "r", cum.alias("cum"), k.alias("k"),
                   n_cal.alias("n_cal"))
         .groupBy("grp")

@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .. import cache
+
 
 def distinct_count_expr(col: Column) -> Column:
     """Aggregate expression: number of distinct values of ``col``,
@@ -1687,9 +1689,8 @@ def spearman_correlations(df: DataFrame,
                             F.coalesce(F.sum("__tot").over(w_off),
                                        F.lit(0)))
                 .select("__c", "__b", "__off"))
-        from .dedup import _track_persist
 
-        rt_all = _track_persist(
+        rt_all = cache.persist(
             loc.join(F.broadcast(offs), ["__c", "__b"])
             .select("__c", "__v",
                     (2 * (F.col("__cum_in") + F.col("__off"))
@@ -2429,12 +2430,11 @@ def psi_drift(df: DataFrame, value_col: str, group_col: str,
     table (frontier-sized); everything downstream is domain-sized
     (groups × bins). NULL values are excluded.
     """
-    from .dedup import _track_persist
 
     # vcs feeds the global value table, the per-(group,bin) counts
     # and the group totals; bk feeds the reference bins and the bin
     # join — persist both (domain-sized) so the data is scanned once
-    vcs = _track_persist(
+    vcs = cache.persist(
         df.filter(F.col(value_col).isNotNull())
         .groupBy(value_col, group_col)
         .agg(F.count(F.lit(1)).alias("c")))
@@ -2447,7 +2447,7 @@ def psi_drift(df: DataFrame, value_col: str, group_col: str,
     bucket = F.least(
         F.floor(cum_before * F.lit(int(n_bins)) / total),
         F.lit(int(n_bins) - 1)).cast("long")
-    bk = _track_persist(
+    bk = cache.persist(
         tv.select(value_col, "c_v", bucket.alias("bucket")))
     gb = bk.groupBy("bucket").agg(F.sum("c_v").alias("c_b"))
     nb = gb.agg(F.count(F.lit(1)).alias("n_b"),

@@ -85,7 +85,8 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
+def random_hyperplanes(dim: int, n_planes: int,
+                       seed: int) -> list[list[float]]:
     """Deterministic random hyperplanes (fixed seed, driver-side, tiny)."""
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).astype(float).tolist()
@@ -153,7 +154,7 @@ def ann_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 F.col(vec_col).alias("c_vec"))
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_vec"))
-    tables = [_hyperplanes(dim, n_planes, seed + 101 * t)
+    tables = [random_hyperplanes(dim, n_planes, seed + 101 * t)
               for t in range(n_tables)]
     # Vectorized bucket computation (Arrow batch + one matmul against
     # all tables' planes) — the sign-bit semantics match
@@ -420,19 +421,6 @@ def ann_topk_ivf_prefit(corpus: DataFrame, queries: DataFrame,
         .select("query_id", "neighbor_id", "cosine",
                 F.col("rank").cast("int").alias("rank"))
     )
-
-
-def ann_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_cells: int = 16, n_probe: int = 4,
-                 seed: int = 7) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: fit + probe in one call
-    (``fit_ivf_centers`` → ``ann_topk_ivf_prefit``). Use the two-step
-    form when the index build should be paid once per corpus."""
-    centers = fit_ivf_centers(corpus, vec_col, n_cells=n_cells, seed=seed)
-    return ann_topk_ivf_prefit(corpus, queries, centers, k=k,
-                               id_col=id_col, vec_col=vec_col,
-                               n_probe=n_probe)
 
 
 def fit_pq_codebooks(corpus: DataFrame, vec_col: str = "embedding",

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _track_persist
+from .. import cache
 
 
 def _mg_partition_factory(col: str, capacity: int):
@@ -111,9 +111,9 @@ def heavy_hitters(df: DataFrame, item_col: str, threshold: int,
     # unaffected (a false candidate just fails the threshold there).
     hashed = items.select(F.xxhash64("item").alias("h"))
     # persisted so the n-check action and the candidates branch share
-    # one pass-1 scan; tracked in the dedup cache scope (bounded FIFO
-    # outside an explicit dedup_cache_scope() block)
-    summary = _track_persist(hashed.mapInPandas(
+    # one pass-1 scan; query-scoped (released when the next registered
+    # query starts)
+    summary = cache.persist(hashed.mapInPandas(
         _mg_partition_factory("h", capacity), schema="h long, cnt long"))
     n = summary.filter(F.col("h").isNull()) \
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("n")).first()["n"]

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import cache
+
 # The ONE whitespace class every tokenizer in the engine splits on —
 # written out explicitly as [ \t\n\r\f] because the three regex
 # engines disagree on \s: RE2 (the DuckDB oracle) = [ \t\n\f\r],
@@ -763,7 +765,6 @@ def bpe_learn_merges(docs: "DataFrame", text_col: str,
     reference BPE in tests/test_textual.py (which also pins the
     driver path equal to the distributed one).
     """
-    from .dedup import _track_persist
 
     spark_ = docs.sparkSession
     wt = (docs
@@ -776,7 +777,7 @@ def bpe_learn_merges(docs: "DataFrame", text_col: str,
         # aggregate, and without the cache the over-threshold fallback
         # would rebuild it from the raw corpus — one wasted pass on
         # exactly the large-vocab case the threshold protects.
-        wt = _track_persist(wt)
+        wt = cache.persist(wt)
         head = wt.take(driver_fit_max_vocab + 1)
         if len(head) <= driver_fit_max_vocab:
             vocab = {tuple(r["word"]): r["weight"] for r in head}
@@ -1177,7 +1178,6 @@ def nb_language_classifier(docs, text_col: str = "text",
     score join becomes an ordinary shuffle join keyed on token —
     both plans are one pass over the test fold's tokens.
     """
-    from .dedup import _track_persist
 
     fold = (F.conv(F.substring(
                 F.md5(F.concat(F.lit(salt + ":"),
@@ -1192,18 +1192,18 @@ def nb_language_classifier(docs, text_col: str = "text",
           .filter(F.col("token") != "")
           .groupBy("doc_id", "lbl", "is_test", "token")
           .agg(F.count(F.lit(1)).alias("tf")))
-    tf = _track_persist(tf)
+    tf = cache.persist(tf)
 
     # --- train: count tables (all derived from tf, no new scan) ---
     ct = (tf.filter(~F.col("is_test"))
           .groupBy("lbl", "token").agg(F.sum("tf").alias("n_tc")))
-    ct = _track_persist(ct)          # vocab × classes upper bound
+    ct = cache.persist(ct)          # vocab × classes upper bound
     tot = ct.groupBy("lbl").agg(F.sum("n_tc").alias("n_c"))
     vn = ct.select("token").distinct().agg(F.count(F.lit(1)).alias("v"))
     # doc-level table feeds priors, the test grid AND the per-class
     # metrics — persist (|docs| rows) so the distinct over the
     # corpus-sized tf table runs once
-    docs_t = _track_persist(
+    docs_t = cache.persist(
         tf.select("doc_id", "lbl", "is_test").distinct())
     classes = (docs_t.filter(~F.col("is_test"))
                .groupBy("lbl").agg(F.count(F.lit(1)).alias("n_train_docs")))
@@ -1246,7 +1246,7 @@ def nb_language_classifier(docs, text_col: str = "text",
     pred = (scored.withColumn("rn", rn).filter(F.col("rn") == 1)
             .select("doc_id", "true_lbl",
                     F.col("cls").alias("pred_lbl"), "scoreq"))
-    pred = _track_persist(pred)
+    pred = cache.persist(pred)
 
     model = (vn.crossJoin(n_train)
              .crossJoin(ct.agg(F.sum("n_tc").alias("n_train_tokens")))
@@ -1345,19 +1345,18 @@ def dsir_importance_scores(docs: "DataFrame", is_target: Column,
         F.count(F.when(F.col("is_t"), 1)).alias("tc"))
     tot = bc.agg(F.sum("rc").alias("rtot"), F.sum("tc").alias("ttot"))
     b = F.lit(float(n_buckets))
-    from .dedup import _track_persist
 
     # persisted (2ce67ee's lesson): AQE never folds identical sibling
     # subtrees, so the ≤n_buckets-row model and the per-doc score
     # table would otherwise re-run the whole tokenize→hash→aggregate
     # chain once per consumer (the q36 legs read each of them twice)
-    lr = _track_persist(
+    lr = cache.persist(
         bc.crossJoin(F.broadcast(tot))
         .select("bkt", "rc", "tc",
                 (F.log((F.col("tc") + 1.0) / (F.col("ttot") + b))
                  - F.log((F.col("rc") + 1.0) / (F.col("rtot") + b)))
                 .alias("lr")))
-    scores = _track_persist(
+    scores = cache.persist(
         occ.join(F.broadcast(lr.select("bkt", "lr")), "bkt")
         .groupBy("doc_id")
         .agg(F.avg("lr").alias("dsir_score"),

@@ -27,11 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.dedup import (
-    dedup_cache_scope,
-    dedup_exact,
-    neardup_pairs_minhash,
-)
+from . import cache
+from .operators.dedup import dedup_exact, neardup_pairs_minhash
 from .operators.textual import (
     bpe_ish_token_count_expr,
     fingerprint_expr,
@@ -81,9 +78,9 @@ def prepare_corpus(docs: DataFrame, id_col: str = "doc_id",
     # counts: sum(copies) = input rows, count(*) = deduped rows — no
     # separate full scan of the input just to count it.
     with_fp = docs.withColumn("__fp", fingerprint_expr(F.col(text_col)))
-    exact = dedup_exact(with_fp, ["__fp"],
-                        canonical_order=[F.col(id_col).asc()],
-                        copies_col="__copies").drop("__fp").persist()
+    exact = cache.persist(
+        dedup_exact(with_fp, ["__fp"], canonical_order=[F.col(id_col).asc()],
+                    copies_col="__copies").drop("__fp"))
     # coalesce: F.sum over an EMPTY frame is NULL (ADVICE r2 — the old
     # docs.count() returned 0 there)
     n_input, n_exact = exact.agg(
@@ -99,70 +96,66 @@ def prepare_corpus(docs: DataFrame, id_col: str = "doc_id",
     # stage. Each observed node sits on the LINEAR part of the chain
     # (executed exactly once per action), so the metrics can't
     # double-count; the observations resolve after the count below.
-    #
-    # dedup_cache_scope: the MinHash signature cache lives exactly as
-    # long as this block (the count materializes `final`), and ONLY
-    # this pipeline's caches are released — not other callers' (ADVICE
-    # r2 on the old module-global unpersist).
+    # Every persist here (the exact-dedup frame, the MinHash signature
+    # cache, the materialized output) is query-scoped: ``cache``
+    # releases it when the next registered query starts.
     from pyspark.sql import Observation
 
-    with dedup_cache_scope():
-        pairs = neardup_pairs_minhash(exact, id_col, text_col,
-                                      threshold=neardup_threshold)
-        if cluster:
-            from .operators.dedup import neardup_clusters
-            labels = neardup_clusters(pairs)
-            drop_ids = labels.filter(F.col("id") != F.col("cluster_id")) \
-                .select(F.col("id").alias(id_col))
-        else:
-            drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        obs_nd = Observation("neardup_prune")
-        deduped = exact.join(drop_ids, id_col, "left_anti") \
-            .observe(obs_nd, F.count(F.lit(1)).alias("n"))
+    pairs = neardup_pairs_minhash(exact, id_col, text_col,
+                                  threshold=neardup_threshold)
+    if cluster:
+        from .operators.dedup import neardup_clusters
+        labels = neardup_clusters(pairs)
+        drop_ids = labels.filter(F.col("id") != F.col("cluster_id")) \
+            .select(F.col("id").alias(id_col))
+    else:
+        drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    obs_nd = Observation("neardup_prune")
+    deduped = exact.join(drop_ids, id_col, "left_anti") \
+        .observe(obs_nd, F.count(F.lit(1)).alias("n"))
 
-        # 3-4. language + quality annotation, then filter
-        annotated = deduped.withColumns({
-            "pred_lang": lang_id_expr(F.col(text_col)),
-            "quality": quality_score_expr(F.col(text_col)),
-            "ws_tokens": token_count_expr(F.col(text_col)),
-            "bpe_tokens": bpe_ish_token_count_expr(F.col(text_col)),
-        })
-        obs_lang = Observation("lang_filter") if keep_langs else None
-        if keep_langs:
-            annotated = annotated.filter(F.col("pred_lang").isin(*keep_langs)) \
-                .observe(obs_lang, F.count(F.lit(1)).alias("n"))
-        final = annotated.filter(F.col("quality") >= min_quality)
+    # 3-4. language + quality annotation, then filter
+    annotated = deduped.withColumns({
+        "pred_lang": lang_id_expr(F.col(text_col)),
+        "quality": quality_score_expr(F.col(text_col)),
+        "ws_tokens": token_count_expr(F.col(text_col)),
+        "bpe_tokens": bpe_ish_token_count_expr(F.col(text_col)),
+    })
+    obs_lang = Observation("lang_filter") if keep_langs else None
+    if keep_langs:
+        annotated = annotated.filter(F.col("pred_lang").isin(*keep_langs)) \
+            .observe(obs_lang, F.count(F.lit(1)).alias("n"))
+    final = annotated.filter(F.col("quality") >= min_quality)
 
-        if mask_pii:
-            from .operators.textual import mask_pii_expr
-            final = final.withColumn(text_col, mask_pii_expr(F.col(text_col)))
+    if mask_pii:
+        from .operators.textual import mask_pii_expr
+        final = final.withColumn(text_col, mask_pii_expr(F.col(text_col)))
 
-        if chunk_tokens:
-            from .operators.textual import chunk_documents
-            # the pre-chunk frame feeds BOTH the chunker and the
-            # metadata join — persist it so neither branch re-runs the
-            # upstream chain; its count IS the quality-stage count
-            final = final.persist()
-            n_quality = final.count()
-            meta = final.drop(text_col)
-            chunks = chunk_documents(final, max_tokens=chunk_tokens,
-                                     overlap=chunk_overlap,
-                                     id_col=id_col, text_col=text_col) \
-                .withColumnRenamed("doc_id", id_col)
-            final = chunks.join(meta, id_col).persist()
-            n_final = final.count()
-            tail = [("quality_filter", int(n_quality)),
-                    ("chunk", int(n_final))]
-        else:
-            final = final.persist()
-            n_final = final.count()
-            tail = [("quality_filter", int(n_final))]
+    if chunk_tokens:
+        from .operators.textual import chunk_documents
+        # the pre-chunk frame feeds BOTH the chunker and the
+        # metadata join — persist it so neither branch re-runs the
+        # upstream chain; its count IS the quality-stage count
+        final = cache.persist(final)
+        n_quality = final.count()
+        meta = final.drop(text_col)
+        chunks = chunk_documents(final, max_tokens=chunk_tokens,
+                                 overlap=chunk_overlap,
+                                 id_col=id_col, text_col=text_col) \
+            .withColumnRenamed("doc_id", id_col)
+        final = cache.persist(chunks.join(meta, id_col))
+        n_final = final.count()
+        tail = [("quality_filter", int(n_quality)),
+                ("chunk", int(n_final))]
+    else:
+        final = cache.persist(final)
+        n_final = final.count()
+        tail = [("quality_filter", int(n_final))]
 
-        counts.append(("neardup_prune", int(obs_nd.get["n"])))
-        if obs_lang is not None:
-            counts.append(("lang_filter", int(obs_lang.get["n"])))
-        counts.extend(tail)
-    exact.unpersist()
+    counts.append(("neardup_prune", int(obs_nd.get["n"])))
+    if obs_lang is not None:
+        counts.append(("lang_filter", int(obs_lang.get["n"])))
+    counts.extend(tail)
 
     stats = spark.createDataFrame(counts, "stage string, n_docs long")
     return final, stats

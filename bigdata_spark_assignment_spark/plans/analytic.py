@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load_table
 from ..operators.relational import top_k_per_group
 from .registry import fround, register
@@ -750,7 +751,6 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT broadcast), and only cohort-sized / state-domain-sized
     aggregates broadcast for the ratio denominators.
     """
-    from ..operators.dedup import _track_persist
 
     # r12 (VERDICT r11 #3): all six legs key their event-sized work on
     # user_id (windows, groupBys, the funnel/cohort/seq joins), but
@@ -768,7 +768,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the coalesced width) — scale-adaptive by construction.
     # All six legs aggregate ints/timestamps only, so the repartition
     # cannot move a float sum (the q75 lesson, plans/cleaning.py).
-    ev = _track_persist(
+    ev = cache.persist(
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_id", "ts", "event_type")
         .repartition("user_id"))
@@ -963,9 +963,7 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (r7): the 3-row percentile aggregate feeds the rounded
     # base columns AND the MAD leg's unrounded group medians — one
     # lineitem aggregation pass instead of two
-    from ..operators.dedup import _track_persist
-
-    stats = _track_persist(
+    stats = cache.persist(
         liq.groupBy("l_returnflag")
         .agg(pcts.alias("ps"), F.count(F.lit(1)).alias("n")))
     base = stats.select("l_returnflag",
@@ -2009,7 +2007,6 @@ def heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair self-join and caps per-basket fan-out (mining.py module
     docstring) — the item-domain long tail never reaches a shuffle.
     """
-    from ..operators.dedup import _track_persist
     from ..operators.sketches import (
         cms_build,
         cms_point_estimates,
@@ -2028,7 +2025,7 @@ def heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token") != "")
     # persisted: the heavy set feeds both the mg rows and the cms
     # query-item side
-    heavy = _track_persist(
+    heavy = cache.persist(
         heavy_hitters(tokens, "token", threshold=60, capacity=8192))
     counters = cms_build(tokens, "token", depth=3, width=512)
     est = cms_point_estimates(counters, heavy.select("token"),

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load_table
 from ..operators.cleaning import (
     day_part_expr,
@@ -1743,8 +1744,6 @@ def _experiment_suite_legs(spark: SparkSession,
                      nullL.alias("n2"), nullD.alias("v1"),
                      nullD.alias("v2"), nullD.alias("v3")))
 
-    from ..operators.dedup import _track_persist
-
     # r12 (VERDICT r11 #4): every estimator leg re-scanned events AND
     # re-ran the md5 variant assignment (a per-row md5+conv — the
     # single most expensive expression in the suite). Project to the
@@ -1761,7 +1760,7 @@ def _experiment_suite_legs(spark: SparkSession,
     bucket = F.conv(F.substring(
         F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
         1, 8), 16, 10).cast("long") % 2
-    events = _track_persist(
+    events = cache.persist(
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_id", "event_type", "ts", "value")
         .withColumn("variant", F.when(bucket == 0, "a").otherwise("b")))
@@ -1988,12 +1987,11 @@ def _experiment_suite_legs(spark: SparkSession,
                         .cast("long").alias("xq"),
                         F.round(F.col("post_s") / F.col("post_n") * 10)
                         .cast("long").alias("yq")))
-    from ..operators.dedup import _track_persist
 
     # the cuped/cuped_var rows both read this 1-row aggregate — persist
     # it or the whole per-user chain runs twice (AQE does not fold
     # identical sibling subtrees; the q61 lesson)
-    cu = _track_persist(cuped_estimate(per_user))
+    cu = cache.persist(cuped_estimate(per_user))
     cuped = cu.select(F.lit("cuped").alias("part"),
                       nullS.alias("k1"), nullS.alias("k2"),
                       F.col("n_a").alias("n1"), F.col("n_b").alias("n2"),

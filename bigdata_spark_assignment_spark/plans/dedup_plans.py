@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import fanout_cache, load_table
 from ..operators.dedup import (
     dedup_exact,
@@ -382,9 +383,8 @@ def neardup_bruteforce_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             == F.floor(F.col("r.acctbal") / F.lit(100.0)),
             *_FS_MU["band"]),
     ]
-    from ..operators.dedup import _track_persist
 
-    linked = _track_persist(
+    linked = cache.persist(
         fs_link(cust, dirty, "c_custkey", "ck",
                 [("c_nationkey", "nk")], fields,
                 match_threshold=_FS_MATCH,
@@ -982,7 +982,6 @@ def _graph_suite_legs(spark: SparkSession,
     The pair graph is persisted so the MinHash sweep is paid once
     across all six algorithm families."""
     from ..operators.dedup import (
-        _track_persist,
         bfs_hops_by_component,
         kcore_by_component,
         lpa_by_component,
@@ -994,7 +993,7 @@ def _graph_suite_legs(spark: SparkSession,
     )
 
     docs = fanout_cache(load_table(spark, sf_dir, "documents"))
-    pairs = _track_persist(
+    pairs = cache.persist(
         neardup_pairs_minhash(docs, "doc_id", "text", threshold=0.6))
     prop = neardup_clusters(pairs)
     star = neardup_clusters_star(pairs)
@@ -1044,7 +1043,7 @@ def _graph_suite_legs(spark: SparkSession,
     # iterative label_propagation pinned equal in tests/test_dedup.py
     from ..operators.dedup import modularity_nano
 
-    lpa_lab = _track_persist(lpa_by_component(pairs, prop, rounds=4))
+    lpa_lab = cache.persist(lpa_by_component(pairs, prop, rounds=4))
     lpa = lpa_lab.select(F.lit("lpa").alias("method"), "id",
                          F.col("label").alias("cluster_id"), nullv)
     # modularity: did LPA find real structure? One nano-quantized

@@ -14,11 +14,14 @@ decimals ON BOTH SIDES (helper ``fround``).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import cache
 
 
 @dataclass(frozen=True)
@@ -143,7 +146,13 @@ def _plus_zero(sql: str) -> str:
 def register(name: str, oracle: str | None = None, doc: str = "",
              tags: tuple[str, ...] = (), parts: tuple[str, ...] = (),
              part_col: str = "part"):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
+
+    ``Query.fn`` is ``fn`` behind a wrapper that first calls
+    ``cache.release()``: each registered query starts by dropping the
+    previous query's persisted intermediates (see ``cache``). The
+    decorated name itself stays the bare plan function.
+    """
 
     # signed-zero normalization: every oracle passes through here once
     oracle = _plus_zero(oracle) if oracle is not None else None
@@ -151,7 +160,13 @@ def register(name: str, oracle: str | None = None, doc: str = "",
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle,
+
+        @functools.wraps(fn)
+        def query_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            cache.release()
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(name=name, fn=query_scoped, oracle=oracle,
                                doc=doc or (fn.__doc__ or ""), tags=tuple(tags),
                                parts=tuple(parts), part_col=part_col)
         return fn

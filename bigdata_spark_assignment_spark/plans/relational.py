@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load_table, union_all
 from ..operators.relational import distinct_count_expr
 from .registry import fround, register
@@ -668,14 +669,13 @@ def correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would full-shuffle the projected fact table at cluster scale,
     # where the scan already fans out naturally — scan_fanout no-ops
     # whenever planned partitions >= parallelism.
-    from ..operators.dedup import _track_persist
     from ..io import scan_fanout
 
     raw = scan_fanout(
         li.na.drop(subset=src_cols)
           .select("l_returnflag", "l_orderkey", "l_linenumber",
                   *src_cols))
-    base = _track_persist(
+    base = cache.persist(
         raw.select(
             "l_returnflag",
             *[F.round(F.col(_CMAT_SRC[c]) * _CMAT_QUANT[c])

@@ -8,14 +8,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import load_table
 from ..operators.similarity import (
-    _hyperplanes,
     ann_topk_lsh,
     brute_force_topk,
     lsh_bucket_expr,
     neardup_pairs_cosine,
     neardup_pairs_cosine_vectorized,
+    random_hyperplanes,
 )
 from .registry import fround, register
 
@@ -86,14 +87,13 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out: 64-dim dot products over every corpus row are scan-
     # stage work; recover parallelism on the single-row-group file
     # (io.scan_fanout; measured 0.54s -> 0.37s at sf0.1)
-    from ..operators.dedup import _track_persist
     from ..operators.similarity import cosine_scored, hard_negative_topk
 
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     queries = emb.filter(F.col("vec_id") < 5)
     # both rankings read the same (query × corpus) cosine table —
     # build it once, persist, rank twice
-    scored = _track_persist(cosine_scored(emb, queries))
+    scored = cache.persist(cosine_scored(emb, queries))
     out = brute_force_topk(emb, queries, k=10, scored=scored)
     hn = hard_negative_topk(emb, queries, k=10, dup_threshold=0.4,
                             scored=scored)
@@ -436,7 +436,7 @@ def _blocked_oracle(planes: list[list[float]]) -> str:
     """
 
 
-_BLOCK_PLANES = _hyperplanes(64, 3, seed=7)
+_BLOCK_PLANES = random_hyperplanes(64, 3, seed=7)
 
 
 @register(
@@ -476,17 +476,17 @@ def blocked_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall vs the unblocked q41 is the pytest contract (single-table
     blocking trades recall for linear shuffle; production unions
     multiple tables like ann_topk_lsh to recover it)."""
-    from ..operators.dedup import _track_persist, neardup_clusters
+    from ..operators.dedup import neardup_clusters
 
     emb = load_table(spark, sf_dir, "embeddings")
     blocked = emb.withColumn(
         "blk", lsh_bucket_expr(F.col("embedding"), _BLOCK_PLANES))
-    pairs = _track_persist(
+    pairs = cache.persist(
         neardup_pairs_cosine(blocked, threshold=0.4, block_col="blk"))
     pair_part = pairs.select(
         F.lit("pair").alias("part"), "id_a", "id_b",
         fround(F.col("cosine")).alias("cosine"))
-    labels = _track_persist(neardup_clusters(pairs))
+    labels = cache.persist(neardup_clusters(pairs))
     cluster_part = (labels.groupBy("cluster_id")
                     .agg(F.count(F.lit(1)).alias("size"))
                     .select(F.lit("cluster").alias("part"),

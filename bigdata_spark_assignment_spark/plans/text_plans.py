@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .. import cache
 from ..io import load_table
 from ..operators.textual import (
     LANG_MARKERS,
@@ -1447,7 +1448,6 @@ def _retrieval_suite_legs(spark: SparkSession,
     """
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import _track_persist
     from ..operators.relational import rrf_fuse
     from ..operators.textual import (bm25_topk, doc_term_freqs,
                                      term_match_topk, tf_idf_terms)
@@ -1458,15 +1458,15 @@ def _retrieval_suite_legs(spark: SparkSession,
     # r7: without the shared persisted tf table the one-pass union
     # tokenized the corpus 16 times (plan audit: 17 documents scans,
     # 0 reused exchanges)
-    tf_all = _track_persist(doc_term_freqs(docs))
+    tf_all = cache.persist(doc_term_freqs(docs))
     scored = tf_idf_terms(docs, tf=tf_all).filter(F.col("doc_id") < 20)
     w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     tfidf = (scored.withColumn("rnk", F.row_number().over(w).cast("int"))
              .filter(F.col("rnk") <= 3)
              .select(F.lit("tfidf").alias("part"), "doc_id", "term",
                      "tf", "df", F.col("tfidf").alias("v"), "rnk"))
-    bm = _track_persist(bm25_topk(docs, _BM25_QUERIES, k=_BM25_K,
-                                  k1=_BM25_K1, b=_BM25_B, tf=tf_all))
+    bm = cache.persist(bm25_topk(docs, _BM25_QUERIES, k=_BM25_K,
+                                 k1=_BM25_K1, b=_BM25_B, tf=tf_all))
     bm25 = (bm.select(F.lit("bm25").alias("part"), "doc_id",
                       F.col("query_id").alias("term"),
                       F.col("doc_len").alias("tf"),
@@ -1565,7 +1565,7 @@ def _retrieval_suite_legs(spark: SparkSession,
     # persisted: ndcg AND recall5 read it — identical sibling
     # subtrees are never folded, so without this the candidate join +
     # eval would run twice
-    ev = _track_persist(retrieval_eval(bm, cand, k=_BM25_K))
+    ev = cache.persist(retrieval_eval(bm, cand, k=_BM25_K))
     nulls = [F.lit(None).cast("long").alias("doc_id")]
     ndcg = ev.select(F.lit("ndcg").alias("part"), *nulls,
                      F.col("query_id").alias("term"),

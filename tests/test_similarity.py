@@ -83,12 +83,15 @@ def test_ann_ivf_recall_at_10(spark, sf_smoke):
     16 cells and 6 probes on weakly-clustered data, most true
     neighbors' cells are probed."""
     from bigdata_spark_assignment_spark.operators.similarity import (
-        ann_topk_ivf,
+        ann_topk_ivf_prefit,
+        fit_ivf_centers,
     )
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = brute_force_topk(emb, queries, k=10).collect()
-    approx = ann_topk_ivf(emb, queries, k=10, n_cells=16, n_probe=6).collect()
+    centers = fit_ivf_centers(emb, n_cells=16, seed=7)
+    approx = ann_topk_ivf_prefit(emb, queries, centers, k=10,
+                                 n_probe=6).collect()
     exact_sets, approx_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -103,15 +106,17 @@ def test_ann_ivf_full_probe_is_exact(spark, sf_smoke):
     """Probing every cell must reproduce the exact top-k (IVF's
     correctness limit case)."""
     from bigdata_spark_assignment_spark.operators.similarity import (
-        ann_topk_ivf,
+        ann_topk_ivf_prefit,
+        fit_ivf_centers,
     )
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     exact = {(r.query_id, r.rank): r.neighbor_id
              for r in brute_force_topk(emb, queries, k=5).collect()}
+    centers = fit_ivf_centers(emb, n_cells=8, seed=7)
     full = {(r.query_id, r.rank): r.neighbor_id
-            for r in ann_topk_ivf(emb, queries, k=5,
-                                  n_cells=8, n_probe=8).collect()}
+            for r in ann_topk_ivf_prefit(emb, queries, centers, k=5,
+                                         n_probe=8).collect()}
     assert exact == full
 
 
@@ -121,16 +126,16 @@ def test_blocked_cosine_recall_vs_unblocked(spark, sf_smoke):
     scale path trades recall for an O(rows) shuffle; multi-table
     union recovers it, as in ann_topk_lsh)."""
     from bigdata_spark_assignment_spark.operators.similarity import (
-        _hyperplanes,
         lsh_bucket_expr,
         neardup_pairs_cosine,
         neardup_pairs_cosine_vectorized,
+        random_hyperplanes,
     )
     emb = load_table(spark, sf_smoke, "embeddings")
     full = {(r.id_a, r.id_b)
             for r in neardup_pairs_cosine_vectorized(
                 emb, threshold=0.4).collect()}
-    planes = _hyperplanes(64, 3, seed=7)
+    planes = random_hyperplanes(64, 3, seed=7)
     blocked_df = emb.withColumn(
         "blk", lsh_bucket_expr(F.col("embedding"), planes))
     blocked = {(r.id_a, r.id_b)

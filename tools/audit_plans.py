@@ -18,9 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_spark_assignment_spark.plans import REGISTRY  # noqa: E402
 from bigdata_spark_assignment_spark.session import get_session  # noqa: E402
-from bigdata_spark_assignment_spark.operators.dedup import (  # noqa: E402
-    unpersist_dedup_caches,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
@@ -56,7 +53,6 @@ def main() -> None:
                 row[key] = len(re.findall(pat, plan))
         except Exception as exc:  # noqa: BLE001
             row["err"] = f"{type(exc).__name__}: {exc}"[:160]
-        unpersist_dedup_caches()
         print(json.dumps(row), flush=True)
 
 

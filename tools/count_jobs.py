@@ -22,9 +22,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     names = sys.argv[1:]
     import bench
-    from bigdata_spark_assignment_spark.operators.dedup import (
-        unpersist_dedup_caches,
-    )
     from bigdata_spark_assignment_spark.plans import REGISTRY
     from bigdata_spark_assignment_spark.session import get_session
 
@@ -57,7 +54,6 @@ def main() -> None:
         out[name] = {"jobs": len(jobs), "stages": n_stages,
                      "tasks": n_tasks, "wall": wall}
         sc.setJobGroup(None, None)
-        unpersist_dedup_caches()
     print(json.dumps(out), flush=True)
 
 

@@ -243,17 +243,15 @@ def run_sf1_full(spark) -> dict:
             if d.get("sf") == 0.1:
                 base = dict(d.get("queries", {}))
                 # median-of-3 suite entries are WARM (repeats reuse
-                # the slot's persisted frames); the sf1 run here is
+                # compiled plans; bench runs from before query-scoped
+                # caching also reused the slot's persisted frames);
+                # the sf1 run here is
                 # one COLD pass, so pair cold-vs-cold via the first
                 # repeat sample or the ratio reads inflated (r8 s2:
                 # q36 showed 5.2x median-paired vs 2.8x cold-paired)
                 for n, samples in d.get("repeat_samples", {}).items():
                     if samples and n in base:
                         base[n] = samples[0]
-
-    from bigdata_spark_assignment_spark.operators.dedup import (
-        unpersist_dedup_caches,
-    )
 
     timings, rows = {}, []
     for name in sorted(REGISTRY):
@@ -263,11 +261,6 @@ def run_sf1_full(spark) -> dict:
         REGISTRY[name].fn(spark, SF1_DIR) \
             .write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 2)
-        # drain the tracked-persist pool between slots, exactly like
-        # bench.py (r9): without it, 46 slots of 10x-sized persisted
-        # frames accumulate and later slots absorb eviction/GC noise —
-        # q07's sf1 absolute swung 22.8->33.3s purely by suite position
-        unpersist_dedup_caches()
         b = base.get(name)
         ratio = round(timings[name] / b, 1) if b else None
         flag = " SUPER-LINEAR" if ratio is not None and ratio > 10 else ""
@@ -564,16 +557,14 @@ def run_sf1_paired(spark) -> dict:
     the sf1 ratio 2.19-2.88x with zero code change). Here each slot
     runs sf0.1 then sf1 back-to-back in the same process, so both ends
     of every ratio see the same host minute; per-slot ratios and the
-    total are then host-drift-robust. Persist pools are drained after
-    each side, exactly like bench.py. Unlike bench.py, q69's
+    total are then host-drift-robust. Each registered query releases
+    the previous one's persists when it starts (``cache``), so neither
+    side reads the other's cached frames. Unlike bench.py, q69's
     sink-write phase is NOT subtracted — it appears on BOTH sides of
     the pair, so the slot's ratio still reads write-inclusive scaling
     (a deliberate difference: this harness measures scaling shape,
     not the scored suite seconds)."""
     import bench as _bench
-    from bigdata_spark_assignment_spark.operators.dedup import (
-        unpersist_dedup_caches,
-    )
     from bigdata_spark_assignment_spark.plans import REGISTRY
     from bigdata_spark_assignment_spark.plans.similarity_plans import (
         _ivf_centers_for,
@@ -598,12 +589,10 @@ def run_sf1_paired(spark) -> dict:
         t0 = time.perf_counter()
         q.fn(spark, SRC).write.format("noop").mode("overwrite").save()
         small = time.perf_counter() - t0
-        unpersist_dedup_caches()
         t0 = time.perf_counter()
         q.fn(spark, SF1_DIR) \
             .write.format("noop").mode("overwrite").save()
         big = time.perf_counter() - t0
-        unpersist_dedup_caches()
         tot_s += small
         tot_b += big
         rows[name] = {"sf01_s": round(small, 2), "sf1_s": round(big, 2),

@@ -20,9 +20,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     names = sys.argv[1:]
     import bench
-    from bigdata_spark_assignment_spark.operators.dedup import (
-        unpersist_dedup_caches,
-    )
     from bigdata_spark_assignment_spark.plans import REGISTRY
     from bigdata_spark_assignment_spark.session import get_session
 
@@ -40,7 +37,6 @@ def main() -> None:
             REGISTRY[name].fn(spark, SF_DIR) \
                 .write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
-        unpersist_dedup_caches()
         out[name] = {"samples": samples,
                      "median": statistics.median(samples)}
     print(json.dumps(out), flush=True)
