@@ -253,11 +253,10 @@ def main() -> None:
                 phases[f"{name}.{tag}"] = round(
                     time.perf_counter() - t0, 3)
 
-        # drain the tracked-persist pool between slots (r8): a suite
-        # query plus its attribution runs can enqueue ~2x its live
-        # frames; without the drain, the NEXT slot's persists could
-        # evict frames this loop no longer needs anyway, and memory
-        # accumulates across 46 slots
+        # release this slot's persists: redundant, because
+        # plans.registry.register releases the previous query's
+        # persists when the next registered query starts, but kept
+        # because the timed protocol is frozen
         from bigdata_spark_assignment_spark.cache import (
             release as unpersist_dedup_caches,
         )

@@ -23,11 +23,12 @@ with a planted linear signal — is that LR recovers the signal
 (R² ≫ 0) and RMSE lands near the planted noise σ.
 
 100 TB notes: cleaning is a fit pass and a literal transform, the
-shape of the reference's ``Imputer`` → ``ImputerModel``: the join
-guard, the constant-prune flags, the modes and the means are each one
-small aggregate read to the driver, and they re-enter as literals, so
-after the broadcast plane join (planes is a bounded dimension) the
-cleaned plan is narrow projections and filters. StringIndexer collects
+shape of the reference's ``Imputer`` → ``ImputerModel``. The fit reads
+two 1-row aggregates to the driver: the join guard over the fact, and
+one aggregate over the cut holding every column's constant-prune flag,
+the modes and the means. They re-enter as literals, so after the
+broadcast plane join (planes is a bounded dimension) the cleaned plan
+is narrow projections and filters. StringIndexer collects
 per-column distinct labels to the driver — bounded by categorical
 cardinality, not data size. Cross-validation multiplies the training
 cost by folds×grid (plus one refit); ``cross_validate`` runs those
@@ -97,11 +98,9 @@ from ..operators.cleaning import (
     constant_expr,
     day_part_expr,
     derived_age_expr,
-    means_frame,
-    modes_frame,
+    mode_expr,
     na_to_null,
     null_to_unknown,
-    prune_constant_columns,
 )
 
 LABEL = "ArrDelay"
@@ -138,8 +137,9 @@ def clean_flights(flights: DataFrame, planes: DataFrame) -> DataFrame:
       discriminates (J2 guard, :132-139: >1 distinct value, NULL
       counted);
     * NA→null everywhere, then cast numerics to int (:168-222);
-    * single-pass constant-column prune, force-keeping Year (:184-208);
-    * mode-impute calendar ints, mean-impute continuous ints (:262-275);
+    * constant-column prune, force-keeping Year (:184-208);
+    * mode-impute calendar ints, mean-impute continuous ints (:262-275)
+      — the prune flags, the modes and the means are one aggregate;
     * PlaneAge = Year − year(issue_date) clamped at 0 (:283-285), when
       the planes were joined;
     * categorical null→"unknown" (:294-297);
@@ -161,17 +161,21 @@ def clean_flights(flights: DataFrame, planes: DataFrame) -> DataFrame:
 
     df = na_to_null(df)
     df = df.withColumns({c: F.col(c).cast("int") for c in NUMERIC_COLS})
-    df = prune_constant_columns(df.localCheckpoint(), force_keep=("Year",))
+    df = df.localCheckpoint()
 
-    mode_cols = [c for c in MODE_IMPUTE_COLS if c in df.columns]
-    mean_cols = [c for c in MEAN_IMPUTE_COLS if c in df.columns]
-    modes = modes_frame(df, mode_cols).first()
-    means = means_frame(df, mean_cols).first()
+    stats = df.agg(
+        *[constant_expr(c).alias(f"__const_{c}") for c in df.columns],
+        *[mode_expr(c).alias(f"__mode_{c}") for c in MODE_IMPUTE_COLS],
+        *[F.avg(c).alias(f"__mean_{c}") for c in MEAN_IMPUTE_COLS]).first()
+    df = df.drop(*[c for c in df.columns
+                   if stats[f"__const_{c}"] and c != "Year"])
     df = df.withColumns({
-        **{c: F.coalesce(F.col(c), F.lit(modes[f"__mode_{c}"])
-                         .cast(df.schema[c].dataType)) for c in mode_cols},
-        **{c: F.coalesce(F.col(c), F.lit(means[f"__mean_{c}"])
-                         .cast("double")) for c in mean_cols}})
+        **{c: F.coalesce(F.col(c), F.lit(stats[f"__mode_{c}"])
+                         .cast(df.schema[c].dataType))
+           for c in MODE_IMPUTE_COLS if c in df.columns},
+        **{c: F.coalesce(F.col(c), F.lit(stats[f"__mean_{c}"])
+                         .cast("double"))
+           for c in MEAN_IMPUTE_COLS if c in df.columns}})
 
     if joined:
         df = df.withColumn(

@@ -10,8 +10,11 @@ so filters still push down and whole-stage codegen fuses the chain.
 
 100 TB notes: all ops in this module are narrow (no shuffle) except
 ``prune_constant_columns`` / ``impute_*`` which each run exactly one
-aggregation over the input (the reference runs 2 shuffle jobs PER
-COLUMN for the prune, ``Main.scala:184-208``).
+global aggregation over the input (the reference runs 2 shuffle jobs
+PER COLUMN for the prune, ``Main.scala:184-208``). ``constant_expr``,
+``mode_expr`` and ``F.avg`` are plain aggregate expressions, so a
+caller that needs several of these statistics (``clean_flights``) reads
+them all in one aggregate.
 """
 
 from __future__ import annotations
@@ -136,72 +139,34 @@ def prune_constant_columns(df: DataFrame, force_keep: Sequence[str] = ()) -> Dat
     return df.drop(*drop) if drop else df
 
 
-def means_frame(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """1-row frame of the column means, one ``__mean_<c>`` per column
-    (NULL for a column with no non-null value) — the fitted statistic
-    of ``impute_mean``."""
-    return df.agg(*[F.avg(c).alias(f"__mean_{c}") for c in cols])
-
-
 def impute_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """A5/M2 (``Main.scala:273-275``): replace NULLs with the column
     mean. One aggregation job producing a 1-row frame, broadcast back —
     the scalar-subquery pattern, no driver round-trip in the plan.
     """
-    out = df.crossJoin(F.broadcast(means_frame(df, cols)))
+    means = df.agg(*[F.avg(c).alias(f"__mean_{c}") for c in cols])
+    out = df.crossJoin(F.broadcast(means))
     out = out.withColumns(
         {c: F.coalesce(F.col(c), F.col(f"__mean_{c}")) for c in cols})
     return out.drop(*[f"__mean_{c}" for c in cols])
 
 
-def modes_frame(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """1-row frame of the column modes as strings, one ``__mode_<c>``
-    per column — the fitted statistic of ``impute_mode``.
-
-    Single-pass: rows explode to (column, value) pairs → one grouped
-    count → one window pick per column → one global aggregate collapses
-    the per-column modes into one row. Values ride the pair frame as
-    strings (Spark's casts round-trip for numeric/date/string types)
-    but the tie-break orders by the NATIVE value (numeric columns by
-    double, others lexically).
-    """
-    numeric = {f.name for f in df.schema.fields
-               if f.dataType.typeName() in
-               ("byte", "short", "integer", "long", "float", "double",
-                "decimal")}
-    pairs = df.select(F.explode(F.array(*[
-        F.struct(
-            F.lit(c).alias("col"),
-            F.col(c).cast("string").alias("val"),
-            (F.col(c).cast("double") if c in numeric
-             else F.lit(None).cast("double")).alias("dkey"),
-        ) for c in cols])).alias("p")) \
-        .select("p.col", "p.val", "p.dkey") \
-        .filter(F.col("val").isNotNull())
-    counts = pairs.groupBy("col", "val").agg(
-        F.count(F.lit(1)).alias("n"), F.first("dkey").alias("dkey"))
-    w = W.partitionBy("col").orderBy(
-        F.col("n").desc(),
-        F.col("dkey").asc_nulls_last(),
-        F.col("val").asc())
-    top = counts.withColumn("rn", F.row_number().over(w)) \
-        .filter(F.col("rn") == 1)
-    # global aggregate → exactly ONE row even if every column was
-    # all-null (ADVICE r1: an empty mode frame must not wipe the data)
-    return top.agg(*[
-        F.max(F.when(F.col("col") == c, F.col("val")))
-        .cast("string").alias(f"__mode_{c}") for c in cols])
+def mode_expr(c: str) -> Column:
+    """Aggregate expression: the mode of column ``c`` — its most
+    frequent non-null value, ties broken toward the smallest value in
+    the column's own ordering (numbers numerically, strings lexically,
+    NaN above every number; the reference's Imputer breaks ties
+    arbitrarily, the rule is pinned so an oracle can express it).
+    NULL when ``c`` has no non-null value."""
+    return F.mode(F.col(c), deterministic=True)
 
 
 def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """A6/M1 (``Main.scala:262-267``): replace NULLs with each column's
-    mode — the most frequent non-null value, ties broken by the smaller
-    value (deterministic: the reference's Imputer breaks ties
-    arbitrarily; the rule is pinned so an oracle can express it) — ALL
-    columns in one aggregation pipeline (``modes_frame``) whose 1-row
-    result is broadcast back. The r1 form looped one aggregation job +
-    one crossJoin per column (the reference's own per-column-job smell,
-    SURVEY.md §4.1).
+    mode (``mode_expr``) — ALL columns in one global aggregate whose
+    1-row result is broadcast back. The r1 form looped one aggregation
+    job + one crossJoin per column (the reference's own
+    per-column-job smell, SURVEY.md §4.1).
 
     A column with zero non-null values yields a NULL mode and its NULLs
     are left in place — the 1-row global aggregate cannot annihilate
@@ -210,12 +175,10 @@ def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     cols = list(cols)
     if not cols:
         return df
-    out = df.crossJoin(F.broadcast(modes_frame(df, cols)))
+    modes = df.agg(*[mode_expr(c).alias(f"__mode_{c}") for c in cols])
+    out = df.crossJoin(F.broadcast(modes))
     out = out.withColumns(
-        {c: F.coalesce(
-            F.col(c),
-            F.col(f"__mode_{c}").cast(df.schema[c].dataType))
-         for c in cols})
+        {c: F.coalesce(F.col(c), F.col(f"__mode_{c}")) for c in cols})
     return out.drop(*[f"__mode_{c}" for c in cols])
 
 

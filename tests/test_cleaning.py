@@ -4,6 +4,8 @@ nulls, "NA", hhmm boundaries, empty input, all-null columns
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -161,6 +163,25 @@ def test_impute_mode_single_pass_semantics(spark):
     vals = sorted(r.x for r in out.collect())
     assert vals == [2, 2, 2, 7, 10, 10]
     assert dict(out.dtypes)["x"] == "int"
+
+    # signed zeros, NaN (ordered above every number) and dates: the
+    # value imputed into the one NULL row, compared by repr so -0.0
+    # and NaN are told apart
+    nan = float("nan")
+    cases = [
+        ("double", [-0.0, -0.0, 0.0, 0.0, 0.0, 1.0], 0.0),
+        ("double", [-0.0, -0.0, -0.0, 0.0, 0.0, 1.0, 1.0, 1.0], -0.0),
+        ("double", [nan, nan, 1.0, 1.0, 2.0], 1.0),
+        ("double", [nan, nan, nan, 1.0, 1.0], nan),
+        ("date", [dt.date(2020, 1, 2), dt.date(2020, 1, 2),
+                  dt.date(2019, 12, 31), dt.date(2019, 12, 31)],
+         dt.date(2019, 12, 31)),
+    ]
+    for typ, xs, want in cases:
+        df = spark.createDataFrame(
+            [(i, x) for i, x in enumerate([*xs, None])], f"id int, x {typ}")
+        got = impute_mode(df, ["x"]).filter(F.col("id") == len(xs)).first().x
+        assert repr(got) == repr(want), (xs, got)
 
 
 def test_impute_mode_multi_column_and_types(spark):

@@ -190,6 +190,26 @@ def test_prepare_cuts_csv_lineage(spark, csv_tables):
         assert node not in plan, plan
 
 
+def test_clean_flights_fit_job_count(spark, csv_tables):
+    """The fit reads its statistics in two aggregates: the join guard
+    over the CSV, then one over the cut holding the prune flags, the
+    modes and the means. With the plane broadcast and the cut itself
+    that is 6 jobs; a second statistics read over the cut would add
+    at least one (reading the prune flags, the modes and the means
+    separately made 12)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(60_000)
+    sc.setJobGroup("clean", "clean_flights job-count test")
+    try:
+        clean_flights(*csv_tables)
+    finally:
+        sc.setJobGroup(None, None)
+    bus.waitUntilEmpty(60_000)
+    assert len(tracker.getJobIdsForGroup("clean")) == 6
+
+
 def test_prepare_matches_uncut_lineage(spark, csv_tables):
     """Differential: the fitted, literal cleaning gives the same
     multiset of cleaned rows as ``reference_clean``, and ``prepare``

@@ -1,22 +1,28 @@
-"""Deterministic cost shape of one bench slot: jobs, stages, tasks.
+"""Cost shape of bench slots: per sample, wall time and jobs, stages,
+tasks.
 
-Timing on this host swings 2x between windows (BASELINE.md variance
-dossiers), but the job/stage/task COUNTS of a slot are deterministic
-given code + config — the right witness for task-storm/job-count
-optimizations (guide §1.4: count your jobs). Runs the slot once
-(after the standard bench warmups) inside a job group and prints the
-counts plus wall time.
+Timing on a shared host swings 2x between windows (BASELINE.md
+variance dossiers), so the job/stage/task COUNTS of a slot are the
+first witness for task-storm/job-count optimizations (guide §1.4:
+count your jobs), and wall time confirms them. After the standard
+bench warmups, runs each slot 3 times through the noop sink, as
+bench.py does, each sample in its own job group, and prints one JSON
+line: per slot, each sample's wall time and counts plus the median
+wall time. Counts that differ between samples show which slots are
+not deterministic given code + config.
 
 Usage: SPARK_GRAFT_CPUS=32 python tools/count_jobs.py q30_sessionization [...]
 """
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SAMPLES = 3
 
 
 def main() -> None:
@@ -33,27 +39,37 @@ def main() -> None:
                       SF_DIR)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
     out = {}
     for name in names:
-        sc.setJobGroup(name, name)
-        t0 = time.perf_counter()
-        REGISTRY[name].fn(spark, SF_DIR) \
-            .write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 3)
-        jobs = tracker.getJobIdsForGroup(name)
-        n_stages = n_tasks = 0
-        for jid in jobs:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
-        out[name] = {"jobs": len(jobs), "stages": n_stages,
-                     "tasks": n_tasks, "wall": wall}
-        sc.setJobGroup(None, None)
+        samples = []
+        for i in range(SAMPLES):
+            group = f"{name}#{i}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            try:
+                REGISTRY[name].fn(spark, SF_DIR) \
+                    .write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setJobGroup(None, None)
+            wall = round(time.perf_counter() - t0, 3)
+            bus.waitUntilEmpty(60_000)
+            jobs = tracker.getJobIdsForGroup(group)
+            n_stages = n_tasks = 0
+            for jid in jobs:
+                ji = tracker.getJobInfo(jid)
+                if ji is None:
+                    continue
+                for sid in ji.stageIds:
+                    si = tracker.getStageInfo(sid)
+                    if si is not None:
+                        n_stages += 1
+                        n_tasks += si.numTasks
+            samples.append({"wall": wall, "jobs": len(jobs),
+                            "stages": n_stages, "tasks": n_tasks})
+        out[name] = {"samples": samples,
+                     "median": statistics.median(s["wall"]
+                                                 for s in samples)}
     print(json.dumps(out), flush=True)
 
 
